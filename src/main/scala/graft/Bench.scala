@@ -412,6 +412,32 @@ object Bench {
     def secs: Seq[Double] = trials.map(_.sec)
   }
 
+  /** Between-trial isolation, OUTSIDE the timed span: drop cached
+    * plans and nudge GC so the ContextCleaner frees orphaned
+    * localCheckpoint blocks. Stale blocks from earlier queries
+    * otherwise sit in storage memory until a (rare, at this heap
+    * size) full GC, and later queries pay their eviction churn —
+    * round-3 forensics measured up to 4× inflation on the late heavy
+    * queries from exactly this cross-query pollution.
+    */
+  private[graft] def isolateIn(s: SparkSession): Unit = {
+    s.catalog.clearCache()
+    // localCheckpoint() blocks are NOT covered by clearCache(): they
+    // are freed when the RDD object is GC'd, which can lag whole
+    // queries behind in a long bench session — the accumulated
+    // storage squeezes execution memory and the late heavy queries
+    // spill (measured up to 5x inflation on the sf1 dedup stage vs a
+    // fresh session). Unpersist them eagerly by enumeration.
+    s.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    // The roundtrip fixtures allocate a FRESH temp dir per
+    // invocation; in a many-trial session those accumulate until JVM
+    // exit — sweep them eagerly (safe here: no query is in flight
+    // between trials).
+    graft.registry.QueryTmp.sweep()
+    System.gc()
+  }
+
   /** Per-query mins from the previously COMMITTED bench artifact,
     * keyed "name" / "sf1:name" — the cross-round reference that
     * catches consistent inflation (all trials slow under load, so the
@@ -437,7 +463,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt.max(1)
     val gate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "2.0").toDouble
     val fullPath = "bench/BENCH_local.json"
@@ -446,15 +471,7 @@ object Bench {
     val gateWaitSec = waitForQuiet(gate,
       sys.env.getOrElse("SPARK_GRAFT_GATE_WAIT_SEC", "600").toInt)
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Untimed warmup: JIT the write path, list files, load parquet
@@ -472,31 +489,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup failed: ${e.getMessage}")
       }
-    }
-
-    // Between-trial isolation, OUTSIDE the timed span: drop cached
-    // plans and nudge GC so the ContextCleaner frees orphaned
-    // localCheckpoint blocks. Stale blocks from earlier queries
-    // otherwise sit in storage memory until a (rare, at this heap
-    // size) full GC, and later queries pay their eviction churn —
-    // round-3 forensics measured up to 4× inflation on the late heavy
-    // queries from exactly this cross-query pollution.
-    def isolateIn(s: SparkSession): Unit = {
-      s.catalog.clearCache()
-      // localCheckpoint() blocks are NOT covered by clearCache(): they
-      // are freed when the RDD object is GC'd, which can lag whole
-      // queries behind in a long bench session — the accumulated
-      // storage squeezes execution memory and the late heavy queries
-      // spill (measured up to 5x inflation on the sf1 dedup stage vs a
-      // fresh session). Unpersist them eagerly by enumeration.
-      s.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // The roundtrip fixtures allocate a FRESH temp dir per
-      // invocation; in a many-trial session those accumulate until JVM
-      // exit — sweep them eagerly (safe here: no query is in flight
-      // between trials).
-      graft.registry.QueryTmp.sweep()
-      System.gc()
     }
 
     /** Run `name` for `n` timed trials in session `s` against `dir`;
@@ -632,15 +624,7 @@ object Bench {
           SparkSession.clearDefaultSession()
           var spark1: SparkSession = null
           try {
-            spark1 = SparkSession.builder()
-              .master(s"local[$cpus]")
-              .appName("graft-bench-sf1")
-              .config("spark.sql.shuffle.partitions", cpus)
-              .config("spark.sql.adaptive.enabled", "true")
-              .config("spark.sql.session.timeZone", "UTC")
-              .config("spark.ui.enabled", "false")
-              .withExtensions(new graft.plans.GraftExtensions)
-              .getOrCreate()
+            spark1 = GraftSession.local("graft-bench-sf1")
             spark1.sparkContext.setLogLevel("WARN")
             Sf1Headline.flatMap { name =>
               // Per-query quiet gate (round-6 lesson: load arriving
@@ -715,7 +699,7 @@ object Bench {
       val full = jObj(Seq(
         "sf" -> s""""$sfDir"""",
         "trials" -> trials.toString,
-        "cpus" -> cpus,
+        "cpus" -> GraftSession.cpus.toString,
         "wait_gate_sec" -> gateWaitSec.toString,
         "sf1_gate_sec" -> sf1GateSec.toString,
         "loadavg_start" -> s""""$loadStart"""",

@@ -159,8 +159,8 @@ object Tables {
     * - TIMESTAMP: canonical, untouched.
     * - TIMESTAMP_NTZ (micros, no UTC flag): the session TZ is pinned
     *   UTC, so the cast is a metadata-only relabel (bit-identical).
-    * - long (TIMESTAMP(NANOS) via the legacy nanos-as-long conf, which
-    *   [[t]] sets for every read): rebuild micros with integer
+    * - long (TIMESTAMP(NANOS) via the legacy nanos-as-long conf that
+    *   [[GraftSession]] sets): rebuild micros with integer
     *   division — `DIV`, not `/`, since double division loses
     *   precision above 2^53 ns. A plain int64 column carrying MICROS
     *   would be silently misread as nanos here, so the rebuilt value
@@ -200,14 +200,9 @@ object Tables {
       }
     }
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // TIMESTAMP(NANOS) columns reject Spark's vectorized reader outright;
-    // with the legacy conf they read as raw long and the timestamp arm
-    // above rebuilds them. Harmless for every other layout.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTimestamps(
       normalizeNumerics(spark.read.parquet(s"$dir/$name.parquet"), name), name)
-  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "nation")

@@ -102,9 +102,10 @@ object Pipeline {
     val summary = DownloadSink.run(queue, manifestPath, conf.fetch)
 
     // Epilogue: append-history stats (S8).
+    val nCompanies = companies.count()
     val stats = RunStats(
-      companies.count(), filings.count(),
-      companies.count(), split.invalid.count(),
+      nCompanies, filings.count(),
+      nCompanies, split.invalid.count(),
       enrichedCount, cacheHits,
       summary.succeeded, summary.failed)
     import spark.implicits._

@@ -21,7 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the UTF-8 bytes; Java's default `\s` is exactly the six ASCII
   * bytes { \t \n \x0B \f \r ' ' } (NO Unicode whitespace — NBSP is a
   * token byte), and ASCII bytes never occur inside multi-byte UTF-8
-  * sequences, so the byte scan is exact for arbitrary input.
+  * sequences, so the byte scan is exact for well-formed UTF-8. On an
+  * invalid byte sequence the two differ: the scan keeps the raw bytes,
+  * while `split`'s String round-trip turns them into U+FFFD.
   *
   * Parity contract (pinned by WsSplitSpec against the `split` Column
   * form, property-tested over separator-heavy generated strings):

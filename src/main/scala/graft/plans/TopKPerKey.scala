@@ -191,24 +191,12 @@ case class FinalTopKExec(
   }
 }
 
-/** Column-level entry point. Self-registers the planner strategy on the
-  * session (idempotent), so the operator works with or without
-  * `GraftExtensions` wiring.
+/** Column-level entry point. Planned by [[TopKStrategy]], which
+  * `GraftExtensions` injects into every [[graft.GraftSession]].
   */
 object TopK {
   def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    // Planner strategies include both extension-injected and
-    // experimental ones, so this skips self-registration when
-    // GraftExtensions already wired the strategy; the synchronized
-    // re-check makes concurrent callers on one session append at most
-    // once.
-    if (!spark.sessionState.planner.strategies.contains(TopKStrategy))
-      spark.experimental.synchronized {
-        if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-          spark.experimental.extraStrategies =
-            spark.experimental.extraStrategies :+ TopKStrategy
-      }
     val keyExprs = keys.map(ColumnBridge.expressionEager(spark, _))
     val orderExprs = order.map(c => ColumnBridge.expressionEager(spark, c) match {
       case s: SortOrder => s

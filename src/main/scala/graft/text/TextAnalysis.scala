@@ -15,17 +15,9 @@ object TextAnalysis {
     * byte-scan [[graft.functions.WsSplit]] — bit-parity with
     * `split(lower(trim(c)), "\\s+")` (pinned by WsSplitSpec), minus
     * the per-row regex compile + String round-trip `StringSplit` pays.
-    * The retained reference form is [[tokensHof]].
     */
   def tokens(c: Column): Column =
     graft.functions.GraftFunctions.wsSplit(lower(trim(c)))
-
-  /** The `split` Column form — the parity reference WsSplitSpec pins
-    * [[tokens]] against (and the construction every DuckDB twin's
-    * string_split_regex replays).
-    */
-  private[graft] def tokensHof(c: Column): Column =
-    split(lower(trim(c)), "\\s+")
 
   /** Whitespace token count. */
   def tokenCount(c: Column): Column = size(tokens(c))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted bench: run the named registered queries for N trials each
   * in one fresh session and print per-trial seconds — the adjudication
   * tool for cross-round `vs_prev` flags (the full [[graft.Bench]]
@@ -16,16 +14,7 @@ object BenchSubset {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val trials = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-subset")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-bench-subset")
     spark.sparkContext.setLogLevel("WARN")
     // same warmup + between-trial isolation as Bench
     spark.range(1000000).selectExpr("sum(id) AS s")
@@ -36,10 +25,7 @@ object BenchSubset {
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
+        graft.Bench.isolateIn(spark)
         sec
       }
       println(f"${name}: ${ts.map(t => f"$t%.2f").mkString(" ")} | min=${ts.min}%.2f")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -26,12 +25,7 @@ object EmbScaleProbe {
     val dir = args(0)
     val nTables = args(2).toInt
     val timeIt = args.length > 3 && args(3) == "time"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-emb-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-emb-scale-probe")
     spark.sparkContext.setLogLevel("WARN")
 
     val vecs = graft.registry.SimilarityQueries.withPerturbed(spark, dir)

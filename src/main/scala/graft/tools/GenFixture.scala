@@ -32,13 +32,7 @@ object GenFixture {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val seed = if (args.length > 1) args(1).toLong else 1337L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-gen-fixture")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-gen-fixture", 8)
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, outDir, seed)
     spark.stop()

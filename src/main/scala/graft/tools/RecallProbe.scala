@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,12 +17,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val k = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-recall-probe")
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.embeddings(spark, dir)

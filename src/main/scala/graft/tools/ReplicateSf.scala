@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -33,12 +33,7 @@ object ReplicateSf {
     val (base, out) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 10
     val docsOnly = args.length > 3 && args(3) == "docs"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-replicate-sf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-replicate-sf")
     spark.sparkContext.setLogLevel("WARN")
     if (new java.io.File(s"$out/_DONE").exists()) {
       println(s"[replicate] $out already complete"); return

@@ -549,15 +549,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-scale-probe")
     spark.sparkContext.setLogLevel("WARN")
     if (args.headOption.contains("seq")) benchSeq(spark, args(1), args.drop(2).toSeq)
     else if (args.headOption.contains("ab")) args.drop(1).foreach(abJaccard(spark, _))

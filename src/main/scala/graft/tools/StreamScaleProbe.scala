@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -48,13 +48,7 @@ object StreamScaleProbe {
     val label = if (args.length > 1) args(1) else "tier"
     val nFiles = if (args.length > 2) args(2).toInt else 64
     val filesPerTrigger = if (args.length > 3) args(3).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-stream-scale")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- one-time prepare: time-ordered part files under target/

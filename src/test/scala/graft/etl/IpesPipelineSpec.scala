@@ -141,4 +141,47 @@ class IpesPipelineSpec extends AnyFunSuite {
     assert(all.count() === 3)
     assert(newCache.count() === 3) // cache grew by the two misses
   }
+
+  /** Twelve distinct relevant applicant names: a name universe past a
+    * parity cap tightened to 10.
+    */
+  private lazy val twelveNames = bronze(Seq("Alpha", "Bravo", "Charlie", "Delta",
+    "Echo", "Foxtrot", "Golf", "Hotel", "India", "Juliet", "Kilo", "Lima")
+    .zipWithIndex.map { case (w, i) =>
+      bronzeRow(s"${100 + i}", s"$w Telecom LLC", "2024-05-01", "APPLICATION")
+    })
+
+  test("greedy parity mode refuses a name universe past the driver cap") {
+    // Parity mode collects the distinct-name universe to the driver;
+    // past spark.graft.dedup.greedyParityMaxNames it must refuse with
+    // a pointer at the distributed default, not OOM.
+    val key = "spark.graft.dedup.greedyParityMaxNames"
+    spark.conf.set(key, "10")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        IpesPipeline.structure(twelveNames, greedyDedup = true).companies.count()
+      }
+      assert(e.getMessage.contains("greedyDedup parity mode"))
+      assert(e.getMessage.contains("greedyDedup = false"))
+    } finally spark.conf.unset(key)
+    // And the default cap admits this domain.
+    assert(IpesPipeline.structure(twelveNames, greedyDedup = true).companies.count() === 12)
+    assert(IpesPipeline.GreedyParityMaxNames >= 1000000)
+  }
+
+  test("greedy parity cap refuses Int.MaxValue instead of wrapping") {
+    // limit(cap + 1) at cap = Int.MaxValue wraps negative — the guard
+    // must turn that into the same loud refusal as a non-positive cap,
+    // not a downstream AnalysisException.
+    val key = "spark.graft.dedup.greedyParityMaxNames"
+    for (bad <- Seq(Int.MaxValue.toString, "0", "-5")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          IpesPipeline.structure(twelveNames, greedyDedup = true).companies.count()
+        }
+        assert(e.getMessage.contains("greedyParityMaxNames"))
+      } finally spark.conf.unset(key)
+    }
+  }
 }

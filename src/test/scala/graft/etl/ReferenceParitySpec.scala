@@ -108,39 +108,4 @@ class ReferenceParitySpec extends AnyFunSuite {
     val greedy = ours.select("normalized_name").collect().map(_.getString(0)).toSet
     assert(cc === greedy)
   }
-
-  test("greedy parity mode refuses a name universe past the driver cap") {
-    // Parity mode collects the distinct-name universe to the driver;
-    // past spark.graft.dedup.greedyParityMaxNames it must refuse with
-    // a pointer at the distributed default, not OOM. Tighten the cap
-    // below this fixture's ~170-name domain to drive the refusal.
-    val key = "spark.graft.dedup.greedyParityMaxNames"
-    spark.conf.set(key, "10")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        IpesPipeline.structure(bronze, greedyDedup = true).companies.count()
-      }
-      assert(e.getMessage.contains("greedyDedup parity mode"))
-      assert(e.getMessage.contains("greedyDedup = false"))
-    } finally spark.conf.unset(key)
-    // And the default cap admits this domain (the parity tests above
-    // already prove it end-to-end).
-    assert(IpesPipeline.GreedyParityMaxNames >= 1000000)
-  }
-
-  test("greedy parity cap refuses Int.MaxValue instead of wrapping") {
-    // limit(cap + 1) at cap = Int.MaxValue wraps negative — the guard
-    // must turn that into the same loud refusal as a non-positive cap,
-    // not a downstream AnalysisException.
-    val key = "spark.graft.dedup.greedyParityMaxNames"
-    for (bad <- Seq(Int.MaxValue.toString, "0", "-5")) {
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException] {
-          IpesPipeline.structure(bronze, greedyDedup = true).companies.count()
-        }
-        assert(e.getMessage.contains("greedyParityMaxNames"))
-      } finally spark.conf.unset(key)
-    }
-  }
 }

@@ -96,4 +96,16 @@ class WsSplitSpec extends AnyFunSuite {
     assert(out.count(r => r.isNullAt(0)) === 1)
     assert(out.forall(r => r.isNullAt(0) == r.isNullAt(1)))
   }
+
+  test("ws_split keeps an invalid UTF-8 byte raw where split gives U+FFFD") {
+    // 'a' 0xFF ' ' 'b': 0xFF never occurs in well-formed UTF-8
+    val r = spark.range(1)
+      .select(unhex(lit("61FF2062")).cast("string").as("text"))
+      .select(
+        transform(GraftFunctions.wsSplit(col("text")), t => hex(t)).as("fast"),
+        transform(split(col("text"), "\\s+"), t => hex(t)).as("ref"))
+      .head()
+    assert(r.getSeq[String](0) === Seq("61FF", "62"))
+    assert(r.getSeq[String](1) === Seq("61EFBFBD", "62"))
+  }
 }
