@@ -54,8 +54,9 @@ import org.apache.spark.sql.functions._
   * `parsed: null`): stdout carries one COMPACT line — 2-decimal
   * medians-or-mins, min values only for flagged queries, worst-5
   * noise flags — kept under ~1.6 KB, while the FULL artifact
-  * (3-decimal per-trial times + loads, every min/max/spread, gate
-  * waits, vs-prev ratios) is written to `bench/BENCH_local.json`.
+  * (3-decimal per-trial times, loads and codegen compile counts,
+  * every min/max/spread, gate waits, vs-prev ratios) is written to
+  * `bench/BENCH_local.json`.
   *
   * Harness contract: the metrics JSON is the ONLY line this main prints
   * to stdout (Spark logs go to stderr; build.sbt routes forked stdout
@@ -388,8 +389,13 @@ object Bench {
   private def headlineOf(ts: Seq[Double]): Double =
     if (flagged(ts)) ts.min else median(ts)
 
-  /** One timed trial with the 1-min loadavg sampled at its start. */
-  private case class Trial(sec: Double, load: Double)
+  /** One timed trial: seconds, external busy cores sampled before it,
+    * and the generated classes Spark compiled during it.
+    */
+  private case class Trial(sec: Double, load: Double, compiles: Long)
+
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Queries with a RECORDED cold-start adjudication: three rounds
     * running (r11–r13) the driver's artifact flagged the same shape —
@@ -515,10 +521,11 @@ object Bench {
               // external busy-cores sampled while this process is idle
               // (recorded per-trial in the artifact's "loads")
               val ld = busyCores()
+              val c0 = compileCount
               val t0 = System.nanoTime()
               try {
                 fn(s, dir).write.format("noop").mode("overwrite").save()
-                ts += Trial((System.nanoTime() - t0) / 1e9, ld)
+                ts += Trial((System.nanoTime() - t0) / 1e9, ld, compileCount - c0)
               } catch { case e: Throwable =>
                 errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
                   .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
@@ -672,9 +679,9 @@ object Bench {
     val total = results.map { case (_, r) => headlineOf(r.secs) }.sum
     val sf1Total = sf1Results.map { case (_, r) => headlineOf(r.secs) }.sum
 
-    // FULL artifact → repo file: per-trial times + loads, median/min/
-    // max/headline/spread/outlier, vs-prev ratio, budget-cap and
-    // suspect flags for every query, nothing truncated.
+    // FULL artifact → repo file: per-trial times, loads and compile
+    // counts, median/min/max/headline/spread/outlier, vs-prev ratio,
+    // budget-cap and suspect flags for every query, nothing truncated.
     try {
       def tierJs(rs: Seq[(String, QRes)]): String =
         jObj(rs.map { case (k, r) =>
@@ -694,7 +701,8 @@ object Bench {
             "vs_prev" -> r.vsPrev.map(f2).getOrElse("null"),
             "warmup_sec" -> r.warmupSec.map(f3).getOrElse("null"),
             "trials" -> ts.map(f3).mkString("[", ",", "]"),
-            "loads" -> r.trials.map(t => f2(t.load)).mkString("[", ",", "]")))
+            "loads" -> r.trials.map(t => f2(t.load)).mkString("[", ",", "]"),
+            "compiles" -> r.trials.map(_.compiles).mkString("[", ",", "]")))
         })
       val full = jObj(Seq(
         "sf" -> s""""$sfDir"""",

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{DownloadSink, Readers, Writers}
@@ -50,9 +51,12 @@ object Pipeline {
 
     // Stage 3: enrichment with the persisted cache (J2 + write-back).
     val cachePath = s"${conf.outDir}/enrichment_cache"
+    // Only a missing cache starts empty: a cache that exists but cannot
+    // be read fails the run rather than re-enriching every company and
+    // overwriting the good cache.
     val cache0 =
       try spark.read.parquet(cachePath)
-      catch { case _: Throwable =>
+      catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(
@@ -79,7 +83,11 @@ object Pipeline {
     // still holds a lazy plan over the OLD cache files
     val enrichedCount = spark.read.parquet(s"${conf.outDir}/enriched").count()
     cache1.write.mode("overwrite").parquet(s"$cachePath.tmp")
-    spark.read.parquet(s"$cachePath.tmp").write.mode("overwrite").parquet(cachePath)
+    val cacheDir = new Path(cachePath)
+    val fs = cacheDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(cacheDir, true)
+    if (!fs.rename(new Path(s"$cachePath.tmp"), cacheDir))
+      throw new java.io.IOException(s"could not move $cachePath.tmp to $cachePath")
 
     // Stage 4: incremental downloads (S9-S11) against the manifest.
     val manifestPath = s"${conf.outDir}/downloads"

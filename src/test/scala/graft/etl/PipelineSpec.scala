@@ -76,10 +76,41 @@ class PipelineSpec extends AnyFunSuite {
 
     val r2 = Pipeline.run(spark, conf.copy(runTs = "2024-01-02T00:00:00Z"))
     assert(r2.cacheHits === 2, "second run must hit the enrichment cache")
+    assert(!new java.io.File(s"$dir/out/enrichment_cache.tmp").exists,
+      "the cache swap must not leave its staging directory behind")
     assert(r2.downloadsOk === 0, "second run must skip completed downloads")
     val hist = spark.read.parquet(s"$dir/out/monitoring/run_stats")
     assert(hist.count() === 2)
     val latest = hist.orderBy(col("run_ts").desc).limit(1).collect()(0)
     assert(latest.getAs[Long]("downloads_ok") === 0L)
+  }
+
+  test("a corrupt enrichment cache fails the run; a missing one starts empty") {
+    val dir = Files.createTempDirectory("pipeline-cache").toString
+    val conf = Pipeline.Config(writeBronze(dir), s"$dir/out")
+    val cacheFile = new java.io.File(s"$dir/out/enrichment_cache/part-00000.parquet")
+    cacheFile.getParentFile.mkdirs()
+    Files.write(cacheFile.toPath, "not parquet".getBytes)
+    intercept[Exception](Pipeline.run(spark, conf))
+    assert(new String(Files.readAllBytes(cacheFile.toPath)) === "not parquet",
+      "an unreadable cache must be left for inspection, not overwritten")
+
+    val fresh = Pipeline.run(spark, conf.copy(outDir = s"$dir/fresh"))
+    assert(fresh.cacheHits === 0)
+    assert(fresh.enriched === 2)
+  }
+
+  test("repeated runs reuse generated code instead of recompiling it") {
+    // Spark's generated-class cache must hold a whole run's classes:
+    // at its default of 100 entries every run recompiled about 146.
+    val dir = Files.createTempDirectory("pipeline-codegen").toString
+    val bronzePath = writeBronze(dir)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val deltas = (1 to 3).map { i =>
+      val c0 = compiles.getCount
+      Pipeline.run(spark, Pipeline.Config(bronzePath, s"$dir/out$i"))
+      compiles.getCount - c0
+    }
+    assert(deltas.last <= 5, s"compiles per run: ${deltas.mkString(", ")}")
   }
 }

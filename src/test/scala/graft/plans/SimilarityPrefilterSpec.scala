@@ -46,6 +46,8 @@ class SimilarityPrefilterSpec extends AnyFunSuite {
     assert(spark.sessionState.optimizer.extendedOperatorOptimizationRules
       .contains(SimilarityPrefilterRule))
     assert(spark.sessionState.planner.strategies.contains(TopKStrategy))
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      graft.GraftSession.CodegenCacheEntries.toString)
     val r = spark.sql("SELECT uuid5('6ba7b810-9dad-11d1-80b4-00c04fd430c8', 'broadband dynamics') AS id")
       .collect()(0).getString(0)
     assert(r === "869d9876-ec7b-5fab-ba2a-ccb08f70571f")
