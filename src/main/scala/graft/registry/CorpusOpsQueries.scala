@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.OracleSafe
 import graft.text.TextAnalysis
 
 /** Corpus-operations extension family: ranked retrieval (BM25),
@@ -303,7 +304,7 @@ object CorpusOpsQueries extends QueryRegistry {
       val ev = Tables.events(s, dir).select(
         col("event_type"),
         date_trunc("hour", col("ts")).as("h"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+        OracleSafe.cents(col("value")).as("cents"))
       val hourly = ev.groupBy(col("event_type"), col("h"))
         .agg(count(lit(1)).cast("long").as("n"),
           sum(col("cents")).as("sc"))
