@@ -17,13 +17,14 @@ import graft.functions.GraftFunctions
   * same threshold.
   *
   * Scale design (100 TB): the comparison domain is DISTINCT names, so
-  * the quadratic step is bounded by |distinct entities|, not |rows|.
-  * For millions of distinct names use `candidatePairs` (equi-join on a
-  * block key — one shuffle) instead of the exhaustive cross join; the
-  * predicate is evaluated inside codegen either way. Components are
-  * computed by iterative min-label propagation: O(component diameter)
-  * shuffles, each a plain hash join, with `localCheckpoint` per
-  * iteration to keep lineage flat.
+  * the quadratic step is bounded by |distinct entities|, not |rows|,
+  * and `candidatePairs` bounds it further to names sharing a block key
+  * (one equi-join — one shuffle, no cross join); the predicate is
+  * evaluated inside codegen. Components come from [[Components]], the
+  * labelling every dedup family shares: driver union-find over a
+  * bounded edge collect, else distributed large-star / small-star
+  * contraction (O(log² n) rounds, `localCheckpoint` per round to keep
+  * lineage flat).
   */
 object FuzzyDedup {
 
@@ -53,21 +54,17 @@ object FuzzyDedup {
     GraftFunctions.roSimilarity(a, b) > ratioThreshold || tokenCost(a, b) < 0.2
 
   /** Multi-key blocked candidate pairs: names co-block when they share
-    * ANY block key, as one equi-join on (key_index, key) — the scale
-    * path, no cross join. Defaults: first token and last token, each
-    * with trailing 's' stripped. Plural pairs always share both keys;
-    * high-ratio pairs differing in one token (the `cold X` ~ `old X`
-    * family) still share the other — multi-key blocking is what closes
-    * that single-key recall gap.
+    * ANY block key — first token or last token, each with trailing 's'
+    * stripped — as one equi-join on (key_index, key): the scale path,
+    * no cross join. Plural pairs always share both keys; high-ratio
+    * pairs differing in one token (the `cold X` ~ `old X` family)
+    * still share the other — multi-key blocking is what closes that
+    * single-key recall gap.
     */
-  def candidatePairs(
-      names: DataFrame, nameCol: String,
-      blockers: Seq[Column => Column] = Seq(
-        c => regexp_replace(substring_index(c, " ", 1), "s$", ""),
-        c => regexp_replace(substring_index(c, " ", -1), "s$", "")))
-      : DataFrame = {
+  def candidatePairs(names: DataFrame, nameCol: String): DataFrame = {
     val keys = names.select(col(nameCol).as("name")).distinct()
-      .select(col("name"), posexplode(array(blockers.map(b => b(col("name"))): _*)))
+      .select(col("name"), posexplode(array(Seq(1, -1).map(token =>
+        regexp_replace(substring_index(col("name"), " ", token), "s$", "")): _*)))
       .withColumnRenamed("pos", "block_i").withColumnRenamed("col", "block")
       .distinct()
     val a = keys.select(col("block_i"), col("block"), col("name").as("name_a"))
@@ -76,111 +73,14 @@ object FuzzyDedup {
       .select("name_a", "name_b").distinct()
   }
 
-  /** Exhaustive pairs over distinct names (reference-parity path;
-    * quadratic in distinct names — fine up to ~10^4 entities).
+  /** Exhaustive pairs over distinct names — the recall reference
+    * `candidatePairs` is checked against (quadratic in distinct names).
     */
   def allPairs(names: DataFrame, nameCol: String): DataFrame = {
     val keys = names.select(col(nameCol).as("name")).distinct()
     keys.select(col("name").as("name_a"))
       .crossJoin(keys.select(col("name").as("name_b")))
       .filter(col("name_a") < col("name_b"))
-  }
-
-  /** Connected components over undirected edges (src, dst) by
-    * alternating large-star / small-star contractions (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14).
-    * Returns (id, component), component = MIN id of the component,
-    * every node appearing in any input edge labeled (self-loop-only
-    * nodes map to themselves).
-    *
-    * Why not min-label propagation (the previous implementation):
-    * label prop converges in O(diameter) rounds, and the realistic
-    * worst case for a near-dup graph at 100 TB — boilerplate chains,
-    * A≈B≈C≈… — has diameter in the thousands, i.e. thousands of
-    * shuffle rounds. The star alternation contracts chains
-    * geometrically and converges in O(log² n) rounds regardless of
-    * topology (<10 in practice).
-    *
-    *   large-star: every node hooks its LARGER neighbors onto the
-    *     minimum of its closed neighborhood — one groupBy(min) +
-    *     one equi-join, no neighbor-set collection, so a hub node's
-    *     edges stay distributed across partitions;
-    *   small-star: every node hooks its smaller neighbors (and
-    *     itself) onto the minimum of its smaller neighborhood.
-    *
-    * Each round is localCheckpoint'ed (constant plan depth across
-    * iterations — the loop-frame discipline PageRank uses) and the
-    * edge frame only ever shrinks toward the star fixed point, at
-    * which every edge is (node, component-min). Convergence is an
-    * EXACT fixed-point check, cheaply: both frames are DISTINCT sets,
-    * and distinct sets of equal cardinality are equal iff one
-    * set-difference is empty — so the per-round cost is one count on
-    * the fresh checkpoint (nearly free) plus ONE anti-join emptiness
-    * probe that only runs when the counts match at all (early rounds
-    * shrink the frame, so the probe is usually skipped entirely; the
-    * r7 form ran TWO except probes every round and carried a ~30%
-    * premium over the driver path at the 100× replica). A
-    * non-converged exit would silently under-merge, so it throws
-    * instead.
-    */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val nodes = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    // canonical undirected form: (a, b) with a > b, no self-loops
-    var cur = edges
-      .filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("a"),
-        least(col("src"), col("dst")).as("b"))
-      .distinct().localCheckpoint(true)
-    var curCount = cur.count()
-    var converged = curCount == 0L
-    var iter = 0
-    // Partition the loop frame by EDGE COUNT, not the session default:
-    // a star round is ~6 tiny stages, and at fixture scale (1e5 edges)
-    // 32-way task scheduling dominates the round — ~50k edges/partition
-    // keeps small graphs on few tasks while a 1e9-edge graph still
-    // spreads across the full parallelism (capped there). The same
-    // size-adaptive coalescing AQE applies to shuffle reads, applied to
-    // the checkpointed frame AQE cannot see.
-    def parts(edges: Long): Int = math.max(1, math.min(
-      cur.sparkSession.sparkContext.defaultParallelism,
-      (edges / 50000L + 1).toInt))
-    cur = cur.coalesce(parts(curCount)).localCheckpoint(true)
-    while (!converged && iter < maxIter) {
-      // large-star: m(u) = min(Γ(u) ∪ {u}); emit (v, m(u)) for v > u
-      val sym = cur.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(cur.select(col("b").as("u"), col("a").as("v")))
-      val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b")) // m <= u < v: canonical
-        .distinct()
-      // small-star on the canonical (a > b) frame: m(a) = min smaller
-      // neighborhood; emit (lo, m(a)) for each lo, plus (a, m(a))
-      val ssMin = ls.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val next = ls.join(ssMin, "a")
-        .select(col("b").as("na"), col("m").as("nb")) // m <= b: canonical
-        .unionByName(ssMin.select(col("a").as("na"), col("m").as("nb")))
-        .filter(col("na") =!= col("nb"))
-        .select(col("na").as("a"), col("nb").as("b"))
-        .distinct().coalesce(parts(curCount)).localCheckpoint(true)
-      val nextCount = next.count()
-      converged = nextCount == curCount && next.except(cur).isEmpty
-      cur = next
-      curCount = nextCount
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not reach the star fixed point in $maxIter " +
-        "rounds — refusing to return a possibly under-merged labeling")
-    // at the fixed point every edge is (member, component-min) and
-    // roots appear only on the b side; label roots (and self-loop-only
-    // nodes) as themselves
-    val labels = cur.select(col("a").as("id"), col("b").as("component"))
-    nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
   /** Scala-side merge predicate (same semantics as the Column form). */
@@ -217,64 +117,23 @@ object FuzzyDedup {
     canonical.toMap
   }
 
-  /** Driver-side union-find over a small edge list — the fast path for
-    * components over DISTINCT entity names, whose edge count is tiny
-    * even when the row count is 100 TB. Canonical = min name per
-    * component.
-    */
-  def unionFind(edges: Array[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.Map.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    val members = (edges.map(_._1) ++ edges.map(_._2)).distinct
-    members.map(m => m -> find(m)).toMap
-  }
-
   /** Distinct-name → canonical-name mapping (singletons map to
-    * themselves). The default is the blocked `candidatePairs` path —
-    * one equi-join on block keys, the 100 TB shape; `exhaustive=true`
-    * opts into the quadratic all-pairs comparison (reference-parity
-    * runs on small name domains only).
-    *
-    * Edge sets up to `driverCcThreshold` run union-find on the driver
-    * (one collect of name pairs — O(distinct entities), not O(rows));
-    * larger graphs fall back to distributed label propagation.
+    * themselves): distinct names → blocked `candidatePairs` → merge
+    * predicate → [[Components.canonical]] (min name per component).
     */
   def canonicalMap(
       names: DataFrame, nameCol: String,
       ratioThreshold: Double = 0.95,
-      exhaustive: Boolean = false,
       driverCcThreshold: Int = 1000000): DataFrame = {
-    val spark = names.sparkSession
     // distinct names are small by construction; materializing them once
     // (localCheckpoint — GC-cleaned, unlike a cached plan) saves the
     // two extra full passes over the (possibly huge) input that pairs
     // and the final join would otherwise trigger.
-    val keys = names.select(col(nameCol).as("name")).distinct().localCheckpoint()
-    val pairs =
-      if (exhaustive) allPairs(keys, "name") else candidatePairs(keys, "name")
-    val edges = pairs
+    val keys = names.select(col(nameCol).as("id")).distinct().localCheckpoint()
+    val pairs = candidatePairs(keys, "id")
       .filter(isDuplicate(col("name_a"), col("name_b"), ratioThreshold))
-      .select(col("name_a").as("src"), col("name_b").as("dst"))
-
-    val sample = edges.limit(driverCcThreshold + 1).collect()
-    val cc =
-      if (sample.length <= driverCcThreshold) {
-        import spark.implicits._
-        val mapping = unionFind(sample.map(r => (r.getString(0), r.getString(1))))
-        broadcast(mapping.toSeq.toDF("id", "component"))
-      } else connectedComponents(edges) // too big to broadcast back
-
-    keys.join(cc, keys("name") === cc("id"), "left")
-      .select(col("name"), coalesce(col("component"), col("name")).as("canonical"))
+      .select(col("name_a").as("id_a"), col("name_b").as("id_b"))
+    Components.canonical(keys, pairs, driverCcThreshold)
+      .select(col("id").as("name"), col("canonical_id").as("canonical"))
   }
 }

@@ -726,8 +726,8 @@ object ScaleDedup {
     * xxhash64 with per-slot salts over the 8-byte shingle hash (an
     * equally valid permutation family, at long-rehash cost instead of
     * string-rehash); one aggregation produces all slots.
-    */
-  /** Repartition-by-id BEFORE the wide-state aggregation: a plain
+    *
+    * Repartition-by-id BEFORE the wide-state aggregation: a plain
     * groupBy over the exploded index plans a map-side partial
     * aggregate whose per-task hash map spans up to EVERY doc group
     * (k mins ≈ 8k bytes of state each — ~3 GB/task at 5.7M docs,
@@ -889,11 +889,6 @@ object ScaleDedup {
     nearDupPairsPlanned(df, idCol, textCol, n, threshold, missBound, rows)
   }
 
-  /** LSH candidate pairs from a prebuilt (id, shingle) index: band the
-    * signature (bands × rowsPerBand = k), hash each band, join docs
-    * sharing any band bucket. Then verify with exact Jaccard
-    * ([[verifyJaccardPairs]]) if precision matters.
-    */
   /** (id, band, band_hash) LSH bucket keys over a shingle index —
     * shared by the self-join candidate path and the asymmetric
     * new-vs-reference path. rows = k/bands sets the LSH S-curve
@@ -918,27 +913,20 @@ object ScaleDedup {
     * rows: comma-joined signed band strings, `xxhash64(band, str)` —
     * replayed verbatim by the DuckDB oracle (minhashBandedCtes); do
     * not change one without the other. r15: one codegen'd pass
-    * ([[graft.functions.BandHashes]], bit-parity with
-    * [[bandExplodeHof]] pinned by ShingleMinHashSpec — the interpreted
-    * chain allocated a slice + per-slot strings + a concat per band).
+    * ([[graft.functions.BandHashes]], bit-parity with the r13/r14
+    * HOF chain pinned by ShingleMinHashSpec — the interpreted chain
+    * allocated a slice + per-slot strings + a concat per band).
     */
   private[graft] def bandExplode(sigs: DataFrame, k: Int, bands: Int): DataFrame =
     sigs.select(col("id"),
       posexplode(graft.functions.GraftFunctions.bandHashes(col("sig"), bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
 
-  /** The r13/r14 HOF chain — the parity reference the spec pins the
-    * codegen'd [[graft.functions.BandHashes]] expression against.
+  /** LSH candidate pairs from a prebuilt (id, shingle) index: band the
+    * signature (bands × rowsPerBand = k), hash each band, join docs
+    * sharing any band bucket. Then verify with exact Jaccard
+    * ([[verifyJaccardPairs]]) if precision matters.
     */
-  private[graft] def bandExplodeHof(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rows = k / bands
-    sigs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, concat_ws(",",
-          transform(slice(col("sig"), b * rows + 1, lit(rows)), _.cast("string")))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-  }
-
   def minhashCandidatesFromIndex(
       index: DataFrame, k: Int = 16, bands: Int = 8): DataFrame =
     bandSelfJoin(bandHashes(index, k, bands))
@@ -1050,29 +1038,6 @@ object ScaleDedup {
           when(col(s"v$j") > 0, "1").otherwise("0")): _*).as("simhash_bits"))
   }
 
-  /** The composed corpus-dedup operation: MinHash-LSH candidates →
-    * exact-Jaccard verification OF THE CANDIDATES ONLY → connected
-    * components → canonical (min id) per duplicate cluster. Returns
-    * (id, canonical_id) for every input doc; `filter(id ===
-    * canonical_id)` yields the deduped corpus.
-    *
-    * Shuffle budget: one shingle explode feeds both stages (the index
-    * is localCheckpoint'ed), signatures (1 agg) + band join (1) +
-    * candidate-bounded verify (2 equi-joins) + CC over the duplicate
-    * graph. The exact-Jaccard pass never touches non-candidate pairs —
-    * at 100 TB the LSH stage is what makes verification affordable.
-    *
-    * k=64/bands=32 puts per-pair recall at threshold 0.6 above
-    * 1 − (1 − 0.6²)³² ≈ 1 − 7e−7 — the candidate stage is effectively
-    * lossless for true pairs, which is what lets a full-Jaccard oracle
-    * check this end-to-end.
-    *
-    * Component assignment mirrors FuzzyDedup.canonicalMap: collect up
-    * to `driverCcThreshold` edges for driver union-find (duplicate
-    * edges are tiny relative to corpus rows), overflow falls back to
-    * distributed min-label propagation — and the fallback mapping is
-    * NOT broadcast (it can exceed driver memory by construction).
-    */
   /** Near-dup pairs under [[bandPlan]]-derived banding — the sizing
     * rule made executable: (bands, k) = bandPlan(threshold, missBound,
     * rows), LSH candidates from that derived banding, exact-Jaccard
@@ -1092,6 +1057,28 @@ object ScaleDedup {
     verifyJaccardSets(minhashCandidatesFromSets(sets, k, bands), sets, threshold)
   }
 
+  /** The composed corpus-dedup operation: MinHash-LSH candidates →
+    * exact-Jaccard verification OF THE CANDIDATES ONLY → connected
+    * components → canonical (min id) per duplicate cluster. Returns
+    * (id, canonical_id) for every input doc; `filter(id ===
+    * canonical_id)` yields the deduped corpus.
+    *
+    * Shuffle budget: one shingle explode feeds both stages (the index
+    * is localCheckpoint'ed), signatures (1 agg) + band join (1) +
+    * candidate-bounded verify (2 equi-joins) + CC over the duplicate
+    * graph. The exact-Jaccard pass never touches non-candidate pairs —
+    * at 100 TB the LSH stage is what makes verification affordable.
+    *
+    * k=64/bands=32 puts per-pair recall at threshold 0.6 above
+    * 1 − (1 − 0.6²)³² ≈ 1 − 7e−7 — the candidate stage is effectively
+    * lossless for true pairs, which is what lets a full-Jaccard oracle
+    * check this end-to-end.
+    *
+    * Component assignment is [[Components.canonical]] on the long ids:
+    * up to `driverCcThreshold` duplicate edges run driver union-find,
+    * more fall back to the distributed large-star / small-star
+    * contraction, whose mapping is not broadcast.
+    */
   def nearDupDedup(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.6,
@@ -1103,56 +1090,7 @@ object ScaleDedup {
     val sets = docShingleSets(df, idCol, textCol, n).localCheckpoint()
     val cands = minhashCandidatesFromSets(sets, k, bands)
     val verified = verifyJaccardSets(cands, sets, threshold)
-    assignCanonical(sets.select(col("id")), verified, driverCcThreshold)
-  }
-
-  /** Component-canonical assignment shared by every near-dup family:
-    * connected components over (id_a, id_b) duplicate pairs, canonical
-    * = numeric min per component, singletons map to themselves.
-    * Duplicate edges are tiny relative to corpus rows, so up to
-    * `driverCcThreshold` of them run driver union-find (one bounded
-    * collect); overflow falls back to distributed min-label
-    * propagation, whose mapping is NOT broadcast (it can exceed driver
-    * memory by construction).
-    */
-  /** Order-preserving string encoding of a signed long id: flip the
-    * sign bit (maps signed order onto unsigned order) and render as
-    * fixed-width hex. The CC machinery canonicalizes by MIN STRING, so
-    * lexicographic order must equal numeric order for ALL ids —
-    * `format_string("%020d", id)` breaks on negatives ('-' prefixed,
-    * magnitude-ordered backwards), this does not.
-    */
-  private[graft] def encodeId(c: Column): Column =
-    lpad(hex(c.bitwiseXOR(lit(Long.MinValue))), 16, "0")
-
-  /** Inverse of [[encodeId]]: parse the two 32-bit hex halves (each
-    * fits a long), recombine with a wrapping shift, un-flip the sign
-    * bit.
-    */
-  private[graft] def decodeId(c: Column): Column =
-    shiftleft(conv(substring(c, 1, 8), 16, 10).cast("long"), 32)
-      .bitwiseOR(conv(substring(c, 9, 8), 16, 10).cast("long"))
-      .bitwiseXOR(lit(Long.MinValue))
-
-  def assignCanonical(
-      ids: DataFrame, pairs: DataFrame,
-      driverCcThreshold: Int = 1000000): DataFrame = {
-    val edges = pairs.select(
-      encodeId(col("id_a")).as("src"),
-      encodeId(col("id_b")).as("dst"))
-    val sample = edges.limit(driverCcThreshold + 1).collect()
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val cc =
-      if (sample.length <= driverCcThreshold) {
-        broadcast(
-          FuzzyDedup.unionFind(sample.map(r => (r.getString(0), r.getString(1))))
-            .toSeq.toDF("cid", "component"))
-      } else FuzzyDedup.connectedComponents(edges)
-        .withColumnRenamed("id", "cid")
-    ids.join(cc, encodeId(col("id")) === col("cid"), "left")
-      .select(col("id"),
-        coalesce(decodeId(col("component")), col("id")).as("canonical_id"))
+    Components.canonical(sets.select(col("id")), verified, driverCcThreshold)
   }
 
   /** The end-to-end training-corpus preparation chain — what a 100 TB
@@ -1210,7 +1148,7 @@ object ScaleDedup {
       .localCheckpoint()
     val cands = minhashCandidatesFromSets(sets, 64, 32)
     val verified = verifyJaccardSets(cands, sets, threshold)
-    assignCanonical(sets.select(col("id")), verified)
+    Components.canonical(sets.select(col("id")), verified)
       .filter(col("id") === col("canonical_id"))
       .select(col("id").as("doc_id"))
   }

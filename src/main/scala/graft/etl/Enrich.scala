@@ -102,12 +102,6 @@ object Enrich {
       parsed).otherwise(lit(null).cast(schema))
   }
 
-  /** J2: cache probe → enrich only the misses → union write-back shape.
-    * Returns the enriched frame plus the updated cache contents.
-    * `companies` must carry a `dockets` array column (the A6 context);
-    * cache rows store the full enrichment output including the
-    * docket-derived fields, so hits never recompute context.
-    */
   /** Columns the current cache layout carries beyond the key; caches
     * written by earlier layouts load with null defaults (layout
     * migration — an incremental run against an old cache dir must not
@@ -124,6 +118,12 @@ object Enrich {
       else df.withColumn(name, lit(null).cast(typ))
     }
 
+  /** J2: cache probe → enrich only the misses → union write-back shape.
+    * Returns the enriched frame plus the updated cache contents.
+    * `companies` must carry a `dockets` array column (the A6 context);
+    * cache rows store the full enrichment output including the
+    * docket-derived fields, so hits never recompute context.
+    */
   def enrichWithCache(
       spark: SparkSession,
       companies: DataFrame,

@@ -52,7 +52,6 @@ object IpesPipeline {
   def structure(
       bronze: DataFrame,
       ratioThreshold: Double = 0.95,
-      exhaustive: Boolean = false,
       withId: Boolean = true,
       greedyDedup: Boolean = false): Structured = {
 
@@ -141,7 +140,7 @@ object IpesPipeline {
     } else {
       FuzzyDedup.canonicalMap(
         perName.select(col("normalized_raw").as("name")), "name",
-        ratioThreshold, exhaustive)
+        ratioThreshold)
     }).withColumnRenamed("canonical", "normalized_name")
 
     // Phase 2 — merge dedup'd groups: scalar aggregates re-combine

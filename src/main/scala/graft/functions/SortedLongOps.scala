@@ -94,8 +94,8 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 /** Winnowing window minima of a long-hash array, as a sorted distinct
-  * set — bit-parity with the HOF tail of
-  * [[graft.text.TextAnalysis.winnowFingerprintsHof]]:
+  * set — bit-parity with the HOF tail of the test-side
+  * `HofReferences.winnowFingerprintsHof`:
   * `when(size(h) < w, array_sort(array_distinct(h)))
   *  .otherwise(array_sort(array_distinct(transform(sequence(0, size-w),
   *     i => array_min(slice(h, i+1, w))))))`.

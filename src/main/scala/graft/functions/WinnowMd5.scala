@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints (md5-hex domain) of a token array in ONE
-  * codegen'd pass — bit-parity with the Column chain in
-  * [[graft.text.TextAnalysis.winnowFingerprintsMd5Hof]]:
+  * codegen'd pass — bit-parity with the Column chain in the test-side
+  * `HofReferences.winnowFingerprintsMd5Hof`:
   * shingle strings (`concat_ws(" ", slice(tokens, i+1, n))`, empty
   * below n tokens) → md5 hex per shingle → per-w-window lexicographic
   * min (all hashes when fewer than w) → `array_sort(array_distinct)`.

@@ -54,7 +54,7 @@ object PageRank {
 
   /** r14: graphs whose edge set fits under `driverEdgeThreshold` run
     * the identical half-up integer recurrence ON THE DRIVER (one
-    * bounded collect — the assignCanonical union-find precedent) —
+    * bounded collect — the Components.canonical union-find precedent) —
     * the recurrence is scaled-integer arithmetic, so driver and
     * distributed evaluation are bit-identical (integer sums have no
     * order sensitivity), and the distributed loop's 3 exchanges + 1
@@ -184,8 +184,8 @@ object PageRank {
     * identical half-up integer recurrence over caller-supplied node /
     * edge CTE bodies (`nodesSql` → 1 column `id`; `edgesSql` →
     * `src, dst, w`).
-    */
-  /** `prefixCtes`, when non-empty, is spliced verbatim between WITH and
+    *
+    * `prefixCtes`, when non-empty, is spliced verbatim between WITH and
     * the `nodes` CTE (it must end with a comma) — lets a caller stage
     * shared input CTEs (e.g. a deterministic hash-sampled doc slice)
     * that both `nodesSql` and `edgesSql` reference by name.

@@ -122,15 +122,6 @@ object ScaleDedupQueries extends QueryRegistry {
       .repartition(s.sparkContext.defaultParallelism)
   }
 
-  /** Subset-duplicate fixture: every 11th doc gains a prefix-half copy
-    * at doc_id + offset — containment 1.0 into its source (every
-    * shingle of the prefix is in the original) while Jaccard ≈ 0.5,
-    * invisible to the symmetric dedup families. The offset is derived
-    * as max(doc_id) + 1 (NOT a constant): a grown fixture can never
-    * alias a copy onto a real doc_id, and the SQL twin derives the
-    * same offset, so the construction stays replayable at any scale.
-    * Shared by the full and sampled forms via [[subsetsOver]].
-    */
   /** [[withSubsets]] over the deterministic 1/[[DocSampleMod]] hash
     * slice — subsets planted AFTER sampling (the withNearDupsSampled
     * argument: sampling first keeps every planted pair intact at any
@@ -142,6 +133,15 @@ object ScaleDedupQueries extends QueryRegistry {
       .select(col("doc_id"), col("text"))
       .filter(pmod(xxhash64(col("doc_id")), lit(docMod(s, dir))) === 0))
 
+  /** Subset-duplicate fixture: every 11th doc gains a prefix-half copy
+    * at doc_id + offset — containment 1.0 into its source (every
+    * shingle of the prefix is in the original) while Jaccard ≈ 0.5,
+    * invisible to the symmetric dedup families. The offset is derived
+    * as max(doc_id) + 1 (NOT a constant): a grown fixture can never
+    * alias a copy onto a real doc_id, and the SQL twin derives the
+    * same offset, so the construction stays replayable at any scale.
+    * Shared by the full and sampled forms via [[subsetsOver]].
+    */
   def withSubsets(s: SparkSession, dir: String): DataFrame =
     subsetsOver(s, Tables.documents(s, dir).select(col("doc_id"), col("text")))
 

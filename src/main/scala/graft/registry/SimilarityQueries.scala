@@ -408,10 +408,6 @@ object SimilarityQueries extends QueryRegistry {
     |  TRUE AS agg_recall_ok
     |FROM r WHERE rank <= 5 GROUP BY query_id""".stripMargin
 
-  /** CTE chain for the sampled twins: the xxhash64-selected base slice
-    * (same longHashCte replay as the Spark predicate) with the same
-    * perturbed copies planted after sampling.
-    */
   /** base + perturbed-copy + union CTEs over the FULL embeddings table
     * — the un-sampled sibling of [[sampledBaseCtes]] (the
     * [[withPerturbed]] replay).
@@ -479,6 +475,10 @@ object SimilarityQueries extends QueryRegistry {
     |  JOIN c2 c ON c.cid = mem.cid)
     |WHERE rn = 1""".stripMargin
 
+  /** CTE chain for the sampled twins: the xxhash64-selected base slice
+    * (same longHashCte replay as the Spark predicate) with the same
+    * perturbed copies planted after sampling.
+    */
   private val sampledBaseCtes: String =
     s"""${SampleMod.modCte("embeddings", EmbSampleMod)},
       |${XxHashOracleSql.longHashCte("vsel", "embeddings", Seq("vec_id", "embedding"),

@@ -56,12 +56,6 @@ object Clustering {
         row_number().over(Window.orderBy(col("vec_id"))) - 1)
       .select(col("cid"), col("e").as("c_emb"))
 
-  /** Assign every vector to its nearest centroid: broadcast nested
-    * loop + native top-1. The partial top-k stage collapses the
-    * k-way scored expansion to ≤1 row per vector per partition before
-    * the vec_id exchange — one corpus-cardinality shuffle, never a
-    * k×corpus one (see the class doc's scale-shape note).
-    */
   /** Above this cell count the per-row argmin expression would embed
     * too large a literal in the plan (k × dim doubles ship inside
     * every task binary, where a broadcast torrents once per executor)
@@ -71,6 +65,13 @@ object Clustering {
     */
   private val ArgminLiteralMaxCells = 16384
 
+  /** Assign every vector to its nearest centroid: a per-row argmin
+    * up to [[ArgminLiteralMaxCells]] centroids, past that a broadcast
+    * nested loop + native top-1. The partial top-k stage collapses the
+    * k-way scored expansion to ≤1 row per vector per partition before
+    * the vec_id exchange — one corpus-cardinality shuffle, never a
+    * k×corpus one (see the class doc's scale-shape note).
+    */
   private def assign(v: DataFrame, centroids: DataFrame): DataFrame = {
     // r14: for every broadcastable centroid set the argmin is per-row
     // column math against the collected centroids (codegen'd
@@ -339,6 +340,22 @@ object Clustering {
   def autoK(n: Long, targetCellSize: Int = 256): Int =
     math.max(2, math.ceil(math.max(n, 1L).toDouble / targetCellSize).toInt)
 
+  /** Cell count past which [[semDedup]] leaves the flat n × k argmin:
+    * assignment routes through [[assignTwoLevel]] and the Lloyd
+    * training sample is bounded (32 vectors per cell). 4096 cells =
+    * autoK at ~1M vectors with the default 256 target — every
+    * oracle-checked tier (fixtures ≤ 2k vectors, hash-slice sampled
+    * twins at any replica) sits far below it, so the bit-replay twins
+    * never see the approximate path; at 2.2M vectors (8,681 cells)
+    * the flat argmin is ~19e9 distance rows and this gate is the
+    * difference between minutes and an n × k wall. Cell assignment is
+    * BLOCKING, not scoring: a near-dup pair's two near-identical
+    * vectors compute near-identical probe distances, so IVF-style
+    * probing moves cell boundaries, not pair recall, and the
+    * threshold filter downstream stays exact.
+    */
+  val SemDedupTwoLevelCells: Int = 4096
+
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     * partition the corpus with deterministic k-means, score cosine
     * pairs only WITHIN each cluster, connect the ≥ `threshold` pairs,
@@ -369,22 +386,6 @@ object Clustering {
     * @param trainCap as in [[kmeansAssign]] — bounds Lloyd training,
     *                 never the assignment or the pair stage.
     */
-  /** Cell count past which [[semDedup]] leaves the flat n × k argmin:
-    * assignment routes through [[assignTwoLevel]] and the Lloyd
-    * training sample is bounded (32 vectors per cell). 4096 cells =
-    * autoK at ~1M vectors with the default 256 target — every
-    * oracle-checked tier (fixtures ≤ 2k vectors, hash-slice sampled
-    * twins at any replica) sits far below it, so the bit-replay twins
-    * never see the approximate path; at 2.2M vectors (8,681 cells)
-    * the flat argmin is ~19e9 distance rows and this gate is the
-    * difference between minutes and an n × k wall. Cell assignment is
-    * BLOCKING, not scoring: a near-dup pair's two near-identical
-    * vectors compute near-identical probe distances, so IVF-style
-    * probing moves cell boundaries, not pair recall, and the
-    * threshold filter downstream stays exact.
-    */
-  val SemDedupTwoLevelCells: Int = 4096
-
   def semDedup(vectors: DataFrame, k: Int, iters: Int, threshold: Double,
                trainCap: Int = 0,
                driverCcThreshold: Int = 1000000,
@@ -414,8 +415,8 @@ object Clustering {
       .filter(Knn.cosinePre(col("e_a"), col("e_b"), col("na"), col("nb"))
         >= threshold)
       .select(col("id_a"), col("id_b"))
-    graft.dedup.ScaleDedup
-      .assignCanonical(v.select(col("vec_id").as("id")), pairs, driverCcThreshold)
+    graft.dedup.Components
+      .canonical(v.select(col("vec_id").as("id")), pairs, driverCcThreshold)
       .join(assigned.select(col("vec_id").as("id"), col("cid").as("cluster")), "id")
       .select(col("id"), col("cluster"), col("canonical_id"),
         (col("id") === col("canonical_id")).as("is_kept"))

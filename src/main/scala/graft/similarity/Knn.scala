@@ -242,6 +242,15 @@ object Knn {
     }
   }
 
+  /** Above this centroid count the argmax expression would embed too
+    * large a literal matrix in every task binary (the
+    * Clustering.ArgminLiteralMaxCells rationale) — the broadcast
+    * crossJoin + native top-1 form stays the scale path there, and it
+    * also covers the empty-centroid case (empty result, as the r13
+    * window form produced) where the expression's require would throw.
+    */
+  private val AssignLiteralMaxCentroids = 16384
+
   /** Assign every vector to its nearest centroid. r14: the argmax is
     * per-row column math against the collected centroid set (bounded —
     * autoCentroids caps at 4096) through the codegen'd
@@ -252,15 +261,6 @@ object Knn {
     * (round-6 cosine, NaN-high ordering, cid-asc ties, null → smallest
     * cid) is pinned in the expression and by ShingleMinHashSpec.
     */
-  /** Above this centroid count the argmax expression would embed too
-    * large a literal matrix in every task binary (the
-    * Clustering.ArgminLiteralMaxCells rationale) — the broadcast
-    * crossJoin + native top-1 form stays the scale path there, and it
-    * also covers the empty-centroid case (empty result, as the r13
-    * window form produced) where the expression's require would throw.
-    */
-  private val AssignLiteralMaxCentroids = 16384
-
   def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     // bounded probe, not an unconditional collect: a caller passing a
     // huge centroid frame must fall back, not OOM the driver
@@ -341,18 +341,6 @@ object Knn {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** Embedding-cosine near-duplicate pairs, blocked: candidates are
-    * pairs co-bucketed in ANY of `nTables` independent sign-bit LSH
-    * tables (one posexplode pass + one self-equi-join on (tbl,
-    * bucket)), verified with exact cosine. No cross join anywhere —
-    * cost is bounded by in-bucket pair counts. Recall: a pair at
-    * angle θ co-buckets per table with prob (1 − θ/π)^nPlanes and is
-    * missed with the nTables-th power of the complement — at the 8×4
-    * default that is ~1.6e−6 for cos≈0.9999 pairs but ~0.9% for pairs
-    * AT a 0.99 threshold (θ/π ≈ 0.045 → per-table co-bucket ≈ 0.69).
-    * The stage is effectively lossless only for pairs well above the
-    * threshold; corpora with boundary-pair mass should raise nTables.
-    */
   /** Embedding-space semantic dedup: blocked cosine near-dup pairs →
     * connected components → canonical (min id) per duplicate cluster.
     * Returns (id, canonical_id) for every vector; `filter(id ===
@@ -366,7 +354,7 @@ object Knn {
       nPlanes: Int = 0, nTables: Int = 4,
       driverCcThreshold: Int = 1000000): DataFrame = {
     val pairs = cosineNearDupPairsBlocked(vectors, dim, threshold, nPlanes, nTables)
-    graft.dedup.ScaleDedup.assignCanonical(
+    graft.dedup.Components.canonical(
       vectors.select(col("vec_id").as("id")), pairs, driverCcThreshold)
   }
 
@@ -688,7 +676,19 @@ object Knn {
         (col("_total") >= minTotalHits).as("agg_recall_ok"))
   }
 
-  /** `nPlanes <= 0` (the default) derives the plane count from the
+  /** Embedding-cosine near-duplicate pairs, blocked: candidates are
+    * pairs co-bucketed in ANY of `nTables` independent sign-bit LSH
+    * tables (one posexplode pass + one self-equi-join on (tbl,
+    * bucket)), verified with exact cosine. No cross join anywhere —
+    * cost is bounded by in-bucket pair counts. Recall: a pair at
+    * angle θ co-buckets per table with prob (1 − θ/π)^nPlanes and is
+    * missed with the nTables-th power of the complement — at the 8×4
+    * default that is ~1.6e−6 for cos≈0.9999 pairs but ~0.9% for pairs
+    * AT a 0.99 threshold (θ/π ≈ 0.045 → per-table co-bucket ≈ 0.69).
+    * The stage is effectively lossless only for pairs well above the
+    * threshold; corpora with boundary-pair mass should raise nTables.
+    *
+    * `nPlanes <= 0` (the default) derives the plane count from the
     * corpus size via [[autoPlanes]] — one extra count() job, which on
     * a parquet-backed corpus is metadata-only and on a derived frame
     * is one cheap pass, either way negligible next to the candidate

@@ -60,25 +60,11 @@ object TextAnalysis {
 
   /** [[langId]] over an already-computed token array. r14: ONE
     * codegen'd pass (token-set build + 50 lookups) replacing five
-    * per-row array_intersect hash builds — bit-parity with the CASE
-    * chain, pinned by spec against [[langIdOfHof]].
+    * per-row array_intersect hash builds — bit-parity with the r13
+    * CASE chain, pinned by ShingleMinHashSpec.
     */
   def langIdOf(toks: Column): Column =
     graft.functions.GraftFunctions.langIdScore(toks, LangStopwords)
-
-  /** The r13 CASE-chain form — the parity reference the spec pins the
-    * codegen'd expression against.
-    */
-  private[graft] def langIdOfHof(toks: Column): Column = {
-    val scores = LangStopwords.map { case (lang, words) =>
-      lang -> stopwordHitsOf(toks, words)
-    }
-    scores.foldRight(lit("und")) { case ((lang, score), rest) =>
-      val othersGeq = scores.filter(_._1 != lang).map(_._2)
-        .foldLeft(lit(true))((acc, s) => acc && score >= s)
-      when(othersGeq && score > 0, lang).otherwise(rest)
-    }
-  }
 
   /** Quality score in [0,1]: word-count saturation, mean word length
     * band, alpha ratio, stopword presence. Plain double arithmetic on
@@ -90,25 +76,12 @@ object TextAnalysis {
     * signals still read the raw string). r14: one codegen'd pass — the
     * Column form's regexp_replace alpha count scanned every document
     * through the regex engine; the expression's byte scan is exact
-    * (ASCII letters are single-byte in UTF-8). Parity pinned by spec
-    * against [[qualityScoreOfHof]].
+    * (ASCII letters are single-byte in UTF-8). Parity with the r13
+    * Column chain pinned by ShingleMinHashSpec.
     */
   def qualityScoreOf(c: Column, toks: Column): Column =
     graft.functions.GraftFunctions.qualityScoreFast(c, toks,
       LangStopwords.head._2)
-
-  /** The r13 Column-chain form — the parity reference. */
-  private[graft] def qualityScoreOfHof(c: Column, toks: Column): Column = {
-    val nTok = size(toks).cast("double")
-    val nChars = length(c).cast("double")
-    val alphaChars = length(regexp_replace(c, "[^A-Za-z]", "")).cast("double")
-    val meanWordLen = nChars / greatest(nTok, lit(1.0))
-    val lengthScore = least(nTok / lit(100.0), lit(1.0))
-    val wordLenScore = when(meanWordLen.between(3.0, 10.0), 1.0).otherwise(0.3)
-    val alphaScore = alphaChars / greatest(nChars, lit(1.0))
-    val stopScore = least(stopwordHitsOf(toks, LangStopwords.head._2).cast("double") / lit(3.0), lit(1.0))
-    round(lengthScore * 0.3 + wordLenScore * 0.2 + alphaScore * 0.3 + stopScore * 0.2, 6)
-  }
 
   /** Content fingerprint: md5 over the canonical token stream (stable
     * under whitespace/case noise).
@@ -138,37 +111,18 @@ object TextAnalysis {
     graft.functions.GraftFunctions.winnowMinSet(
       graft.functions.GraftFunctions.shingleHashes(tokens(c), n), w)
 
-  /** The r14 HOF form — the parity reference the spec pins the
-    * codegen'd [[graft.functions.WinnowMinSet]] tail against.
-    */
-  private[graft] def winnowFingerprintsHof(c: Column, n: Int = 3, w: Int = 4): Column =
-    let1(graft.functions.GraftFunctions.shingleHashes(tokens(c), n), hashes =>
-      when(size(hashes) < w, array_sort(array_distinct(hashes)))
-        .otherwise(array_sort(array_distinct(
-          transform(sequence(lit(0), size(hashes) - w),
-            i => array_min(slice(hashes, i + 1, lit(w))))))))
-
   /** Oracle-checkable winnowing variant: md5 hex strings as the rolling
     * hashes, lexicographic min per window (hex order = numeric order
     * for same-length lowercase hex). Same substring-sharing guarantee
     * as [[winnowFingerprints]]; the xxhash64 form is the scale path
     * (8-byte vs 32-byte fingerprints). r15: one codegen'd pass
     * (shingle bytes → md5 hex → deque window minima → sorted distinct),
-    * bit-parity with [[winnowFingerprintsMd5Hof]] pinned by spec — the
-    * md5-hex value domain the DuckDB twin replays is unchanged.
+    * bit-parity with the r13/r14 interpreted chain pinned by
+    * ShingleMinHashSpec — the md5-hex value domain the DuckDB twin
+    * replays is unchanged.
     */
   def winnowFingerprintsMd5(c: Column, n: Int = 3, w: Int = 4): Column =
     graft.functions.GraftFunctions.winnowMd5(tokens(c), n, w)
-
-  /** The r13/r14 interpreted chain — the parity reference the spec pins
-    * the codegen'd [[graft.functions.WinnowMd5]] expression against.
-    */
-  private[graft] def winnowFingerprintsMd5Hof(c: Column, n: Int = 3, w: Int = 4): Column =
-    let1(transform(shingles(c, n), s => md5(s)), hashes =>
-      when(size(hashes) < w, array_sort(array_distinct(hashes)))
-        .otherwise(array_sort(array_distinct(
-          transform(sequence(lit(0), size(hashes) - w),
-            i => array_min(slice(hashes, i + 1, lit(w))))))))
 
   /** Deterministic reproducible train/validation split: hash-range on
     * md5 of the id — stable under any partitioning, any engine, and
@@ -237,18 +191,6 @@ object TextAnalysis {
     */
   def hashedNgramBuckets(c: Column): Column =
     graft.functions.GraftFunctions.md5NgramBuckets(tokens(c))
-
-  /** The r13 HOF form of [[hashedNgramBuckets]] — kept as the parity
-    * reference the spec pins the codegen'd expression against.
-    */
-  private[graft] def hashedNgramBucketsHof(c: Column): Column =
-    let1(tokens(c), t => {
-      val bigrams = when(size(t) < 2, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(0), size(t) - 2),
-          i => concat_ws(" ", slice(t, i + 1, lit(2)))))
-      transform(concat(t, bigrams),
-        f => conv(substring(md5(f), 1, 3), 16, 10).cast("int"))
-    })
 
   /** Word n-gram shingles (empty below n tokens). The token array is
     * let-bound: the per-shingle lambda captured `tokens(c)` and

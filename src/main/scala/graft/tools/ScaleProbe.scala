@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.ScaleDedup
+import graft.dedup.{Components, ScaleDedup}
 import graft.registry.ScaleDedupQueries
 
 /** Per-stage scaling forensics for the composed near-dup dedup: row
@@ -44,8 +44,8 @@ object ScaleProbe {
       v
     }
     val nVer = verified.count()
-    timed("assignCanonical") {
-      ScaleDedup.assignCanonical(docs.select(col("doc_id").as("id")), verified)
+    timed("canonical") {
+      Components.canonical(docs.select(col("doc_id").as("id")), verified)
         .write.format("noop").mode("overwrite").save()
     }
     println(s"[probe]   rows: docs=$nDocs idx=$nIdx cands=$nCands verified=$nVer " +

@@ -104,23 +104,6 @@ class PlanShapeSpec extends AnyFunSuite {
         "bhj/smj switch (the scale story) needs the adaptive framework")
   }
 
-  /** Global-window boundedness invariant (r10 verdict #6): an
-    * unpartitioned Window funnels its ENTIRE input through one task
-    * (`WindowExec: No Partition Defined` → SinglePartition exchange),
-    * which is fine over a k-row aggregate frame (clusterBalance's
-    * window over k cluster rows) and fatal over a corpus-sized scan at
-    * 100 TB. Nothing structurally prevented a future registry query
-    * from shipping the fatal shape — this sweep does: every Window
-    * with an empty partitionSpec, in every registered query's
-    * OPTIMIZED logical plan, must sit above a bounding operator — an
-    * Aggregate (the registry's global windows all ride k-sized /
-    * single-row aggregate frames), a Limit, or a literal/local input.
-    * A global window whose subtree is scan→join→window with no
-    * aggregation or limit in between is refused here, not on the
-    * cluster. (Logical-plan traversal, not executedPlan string
-    * matching: AQE wraps the physical tree, and the logical Window
-    * node with its partitionSpec is the stable, unambiguous signal.)
-    */
   /** Global windows whose boundedness the logical plan cannot show:
     *  - s8_run_stats_trend: the window's input is the append-history
     *    sink read back from parquet — ONE aggregate row per pipeline
@@ -131,6 +114,22 @@ class PlanShapeSpec extends AnyFunSuite {
     */
   private val boundedWindows = Set("s8_run_stats_trend")
 
+  // Global-window boundedness invariant (r10 verdict #6): an
+  // unpartitioned Window funnels its ENTIRE input through one task
+  // (`WindowExec: No Partition Defined` → SinglePartition exchange),
+  // which is fine over a k-row aggregate frame (clusterBalance's
+  // window over k cluster rows) and fatal over a corpus-sized scan at
+  // 100 TB. Nothing structurally prevented a future registry query
+  // from shipping the fatal shape — this sweep does: every Window
+  // with an empty partitionSpec, in every registered query's
+  // OPTIMIZED logical plan, must sit above a bounding operator — an
+  // Aggregate (the registry's global windows all ride k-sized /
+  // single-row aggregate frames), a Limit, or a literal/local input.
+  // A global window whose subtree is scan→join→window with no
+  // aggregation or limit in between is refused here, not on the
+  // cluster. (Logical-plan traversal, not executedPlan string
+  // matching: AQE wraps the physical tree, and the logical Window
+  // node with its partitionSpec is the stable, unambiguous signal.)
   test("every global (unpartitioned) window sits above a bounded input — all queries") {
     import org.apache.spark.sql.catalyst.plans.logical._
     var swept = 0

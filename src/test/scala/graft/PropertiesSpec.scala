@@ -29,27 +29,6 @@ class PropertiesSpec extends AnyFunSuite {
         "Networks", "Network", "services", "&", "#1")))
   } yield ws.mkString(" ")
 
-  test("canonical-id encoding roundtrips and preserves order for arbitrary longs") {
-    val longs = ((0 until 300).map(i =>
-      Gen.chooseNum(Long.MinValue, Long.MaxValue)
-        .apply(Gen.Parameters.default, Seed(7L + i)).get)
-      ++ Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue)).distinct
-    val rows = longs.toDF("id")
-      .select(col("id"),
-        graft.dedup.ScaleDedup.encodeId(col("id")).as("enc"))
-      .select(col("id"), col("enc"),
-        graft.dedup.ScaleDedup.decodeId(col("enc")).as("dec"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    rows.foreach { case (id, enc, dec) =>
-      assert(dec === id, s"roundtrip broke for $id (enc=$enc)")
-      assert(enc.length === 16, s"non-fixed-width encoding for $id")
-    }
-    // lexicographic order of encodings == numeric order of ids
-    val byNumeric = rows.sortBy(_._1).map(_._2).toSeq
-    val byLex = rows.map(_._2).sortBy(identity).toSeq
-    assert(byNumeric === byLex)
-  }
-
   test("normalizeName is idempotent on arbitrary entity names") {
     val names = samples(nameGen, 300).distinct
     val once = names.toDF("n")

@@ -74,7 +74,7 @@ class FuzzyDedupSpec extends AnyFunSuite {
     // The worst case that motivated the large-star/small-star rewrite:
     // a path graph's diameter equals its length, so the previous
     // min-label propagation needed one shuffle round PER HOP (200 here
-    // — past maxIter, which under-merged silently). The star
+    // — past the 50-round budget, which under-merged silently). The star
     // alternation contracts the chain geometrically; this must
     // converge inside the default budget and label every node with
     // the chain minimum. Random edge order, so canonical (a > b)
@@ -84,7 +84,7 @@ class FuzzyDedupSpec extends AnyFunSuite {
       val (a, b) = (f"n$i%03d", f"n${i + 1}%03d")
       if (rnd.nextBoolean()) (a, b) else (b, a)
     }.toVector)
-    val got = FuzzyDedup.connectedComponents(chain.toDF("src", "dst"))
+    val got = Components.connectedComponents(chain.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got.size === 200)
     assert(got.values.toSet === Set("n000"))
@@ -93,18 +93,25 @@ class FuzzyDedupSpec extends AnyFunSuite {
   test("distributed CC agrees with union-find on random multi-component graphs") {
     // property net over the star alternation: 60 random graphs with
     // mixed singletons, chains, and dense pockets must match driver
-    // union-find exactly (same min-canonical contract).
+    // union-find exactly (same min-canonical contract) — once on string
+    // keys, once on signed long keys scattered across the whole range.
+    def check[K: Ordering](edges: Array[(K, K)], got: Map[K, K], trial: Int): Unit = {
+      val uf = Components.unionFind(edges.filter(e => e._1 != e._2))
+      val allNodes = edges.iterator.flatMap(e => Seq(e._1, e._2)).toSet
+      val want = allNodes.map(x => x -> uf.getOrElse(x, x)).toMap
+      assert(got === want, s"trial $trial")
+    }
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 60) {
       val n = 2 + rnd.nextInt(40)
-      val edges = Array.fill(rnd.nextInt(60))(
-        (f"v${rnd.nextInt(n)}%02d", f"v${rnd.nextInt(n)}%02d"))
-      val got = FuzzyDedup.connectedComponents(edges.toSeq.toDF("src", "dst"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val uf = FuzzyDedup.unionFind(edges.filter(e => e._1 != e._2))
-      val allNodes = (edges.map(_._1) ++ edges.map(_._2)).toSet
-      val want = allNodes.map(x => x -> uf.getOrElse(x, x)).toMap
-      assert(got === want, s"trial $trial")
+      val edges = Array.fill(rnd.nextInt(60))((rnd.nextInt(n), rnd.nextInt(n)))
+      val named = edges.map { case (a, b) => (f"v$a%02d", f"v$b%02d") }
+      check(named, Components.connectedComponents(named.toSeq.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap, trial)
+      val scatter = (v: Int) => v * 0x9E3779B97F4A7C15L
+      val longs = edges.map { case (a, b) => (scatter(a), scatter(b)) }
+      check(longs, Components.connectedComponents(longs.toSeq.toDF("src", "dst"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, trial)
     }
   }
 
@@ -112,16 +119,16 @@ class FuzzyDedupSpec extends AnyFunSuite {
     val edges = FuzzyDedup.allPairs(fixture.toDF("name"), "name")
       .filter(FuzzyDedup.isDuplicate(col("name_a"), col("name_b")))
       .select(col("name_a").as("src"), col("name_b").as("dst"))
-    val distributed = FuzzyDedup.connectedComponents(edges)
+    val distributed = Components.connectedComponents(edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val uf = FuzzyDedup.unionFind(
+    val uf = Components.unionFind(
       edges.collect().map(r => (r.getString(0), r.getString(1))))
     assert(distributed === uf)
   }
 
   test("connectedComponents handles empty edge set") {
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
-    assert(FuzzyDedup.connectedComponents(empty).count() === 0)
+    assert(Components.connectedComponents(empty).count() === 0)
     // canonicalMap still maps all names to themselves
     val got = FuzzyDedup.canonicalMap(Seq("a b", "c d").toDF("name"), "name")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap

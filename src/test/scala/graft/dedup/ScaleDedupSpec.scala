@@ -158,10 +158,10 @@ class ScaleDedupSpec extends AnyFunSuite {
   private lazy val ccReplayExpected: Map[Long, Long] = {
     val pairs = ScaleDedup.ngramJaccardPairs(docs, "doc_id", "text",
       n = 3, threshold = 0.6, maxDocFreq = 0)
-      .collect().map(r => (f"${r.getLong(0)}%020d", f"${r.getLong(1)}%020d"))
-    val cc = FuzzyDedup.unionFind(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val cc = Components.unionFind(pairs)
     docs.select(col("doc_id")).collect().map(_.getLong(0))
-      .map(id => id -> cc.get(f"$id%020d").map(_.toLong).getOrElse(id)).toMap
+      .map(id => id -> cc.getOrElse(id, id)).toMap
   }
 
   test("composed nearDupDedup equals CC over the full exact-Jaccard pairs") {
@@ -184,15 +184,21 @@ class ScaleDedupSpec extends AnyFunSuite {
     assert(got === ccReplayExpected)
   }
 
-  test("assignCanonical handles negative ids (min-id canonical, both branches)") {
+  test("canonical handles negative ids (min-id canonical, both branches)") {
     import spark.implicits._
-    // components: {-5, -3, 2, 7} via chain, {11} singleton, {-9} singleton
-    val ids = Seq(-9L, -5L, -3L, 2L, 7L, 11L).toDF("id")
-    val pairs = Seq((-3L, 2L), (2L, 7L), (-5L, -3L)).toDF("id_a", "id_b")
+    // components: {-5, -3, 2, 7} via chain, {11} singleton, {-9}
+    // singleton, and the extremes {Long.MinValue, -1, 0, Long.MaxValue}
+    // via a chain that crosses zero
+    val ids = Seq(-9L, -5L, -3L, 2L, 7L, 11L,
+      Long.MinValue, -1L, 0L, Long.MaxValue).toDF("id")
+    val pairs = Seq((-3L, 2L), (2L, 7L), (-5L, -3L),
+      (0L, Long.MaxValue), (-1L, 0L), (Long.MinValue, Long.MaxValue))
+      .toDF("id_a", "id_b")
     val expected = Map(-9L -> -9L, -5L -> -5L, -3L -> -5L, 2L -> -5L,
-      7L -> -5L, 11L -> 11L)
+      7L -> -5L, 11L -> 11L) ++
+      Seq(Long.MinValue, -1L, 0L, Long.MaxValue).map(_ -> Long.MinValue)
     for (threshold <- Seq(1000000, 0)) {
-      val got = ScaleDedup.assignCanonical(ids, pairs, threshold)
+      val got = Components.canonical(ids, pairs, threshold)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected, s"driverCcThreshold=$threshold")
     }

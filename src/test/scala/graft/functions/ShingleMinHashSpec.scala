@@ -52,7 +52,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
       val both = df.select(
         col("doc_id"),
         TextAnalysis.winnowFingerprintsMd5(col("text"), n, w).as("fast"),
-        TextAnalysis.winnowFingerprintsMd5Hof(col("text"), n, w).as("ref"))
+        HofReferences.winnowFingerprintsMd5Hof(col("text"), n, w).as("ref"))
       val bad = both.filter(not(col("fast") <=> col("ref"))).count()
       assert(bad === 0, s"winnow_md5 diverged on $bad rows at n=$n w=$w")
     }
@@ -63,7 +63,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
       val both = df.select(
         col("doc_id"),
         TextAnalysis.winnowFingerprints(col("text"), n, w).as("fast"),
-        TextAnalysis.winnowFingerprintsHof(col("text"), n, w).as("ref"))
+        HofReferences.winnowFingerprintsHof(col("text"), n, w).as("ref"))
       val bad = both.filter(not(col("fast") <=> col("ref"))).count()
       assert(bad === 0, s"winnow_min_set diverged on $bad rows at n=$n w=$w")
     }
@@ -77,7 +77,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
           ScaleDedup.docShingleSets(df, "doc_id", "text", 3), k)
         .localCheckpoint()
       val fast = ScaleDedup.bandExplode(sigs, k, bands)
-      val ref = ScaleDedup.bandExplodeHof(sigs, k, bands)
+      val ref = HofReferences.bandExplodeHof(sigs, k, bands)
       val joined = fast.withColumnRenamed("band_hash", "fast_bh")
         .join(ref.withColumnRenamed("band_hash", "ref_bh"),
           Seq("id", "band"), "full")
@@ -108,7 +108,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
     for (df <- Seq(adversarial, corpus)) {
       val both = df.select(
         TextAnalysis.hashedNgramBuckets(col("text")).as("fast"),
-        graft.text.TextAnalysis.hashedNgramBucketsHof(col("text")).as("ref"))
+        HofReferences.hashedNgramBucketsHof(col("text")).as("ref"))
       val bad = both.filter(not(col("fast") <=> col("ref"))).count()
       assert(bad === 0, s"md5_ngram_buckets diverged on $bad rows")
     }
@@ -222,9 +222,9 @@ class ShingleMinHashSpec extends AnyFunSuite {
       val toks = TextAnalysis.tokens(col("text"))
       val both = df.select(
         TextAnalysis.langIdOf(toks).as("lang_fast"),
-        TextAnalysis.langIdOfHof(toks).as("lang_ref"),
+        HofReferences.langIdOfHof(toks).as("lang_ref"),
         TextAnalysis.qualityScoreOf(col("text"), toks).as("q_fast"),
-        TextAnalysis.qualityScoreOfHof(col("text"), toks).as("q_ref"))
+        HofReferences.qualityScoreOfHof(col("text"), toks).as("q_ref"))
       assert(both.filter(not(col("lang_fast") <=> col("lang_ref")) ||
         not(col("q_fast") <=> col("q_ref"))).count() === 0)
     }
