@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -16,8 +17,9 @@ import scala.jdk.CollectionConverters._
   * (one bounded collect, mapping broadcast back); past that the
   * distributed large-star / small-star contraction labels them, and
   * its mapping is NOT broadcast (it can exceed driver memory by
-  * construction). Both paths order keys by their own type, so a long
-  * id's canonical is its numeric minimum, negatives included.
+  * construction). Both paths order keys as Spark does: a long id's
+  * canonical is its numeric minimum, negatives included, and a string
+  * key's is its minimum in UTF-8 byte order.
   */
 object Components {
 
@@ -25,6 +27,13 @@ object Components {
     * inside it on any topology (<10 in practice).
     */
   private val MaxRounds = 50
+
+  /** Spark's string order (UTF-8 bytes, as `min`/`least` and the DuckDB
+    * twins compare) for driver union-find: Java's `String` order
+    * compares UTF-16 units, which puts U+FF21 after U+1F600.
+    */
+  private val Utf8Order: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
 
   /** Driver-side union-find over a small edge list. Canonical = min
     * key per component; every key in any edge is labelled.
@@ -157,7 +166,7 @@ object Components {
             .toSeq.map { case (k, c) => Row(k, c) }
         val keyType = edges.schema("src").dataType
         val rows = keyType match {
-          case StringType => labels[String]
+          case StringType => labels(Utf8Order)
           case LongType => labels[Long]
           case t => throw new IllegalArgumentException(s"unsupported id type $t")
         }

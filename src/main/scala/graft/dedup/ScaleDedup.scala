@@ -13,12 +13,12 @@ import graft.text.TextAnalysis
   *  - exact: one hash shuffle on the digest (map-side combine first);
   *  - jaccard: explode shingles → one shuffle on shingle (the inverted
   *    index), pair counts aggregate map-side; never a cross join;
-  *  - minhash: one agg shuffle for signatures + one join shuffle on
+  *  - minhash: in-row signatures (no shuffle) + one join shuffle on
   *    (band, band_hash) — candidate volume is controlled by bands×rows,
   *    independent of corpus² ;
   *  - simhash: one agg shuffle for the 64 bit-votes.
   *
-  * Intermediate frames that feed two stages (the shingle index) are
+  * Intermediate frames that feed two stages (the doc-set frame) are
   * `localCheckpoint`ed, not `cache`d: blocks are materialized once,
   * lineage is cut, and the ContextCleaner frees them when the frame is
   * garbage-collected — no unpersist bookkeeping leaking across a
@@ -92,128 +92,51 @@ object ScaleDedup {
     * such shingles are far below any useful threshold anyway (their
     * union is ≥ the doc sizes, intersection a handful of stop-
     * shingles). Pass 0 for exact Jaccard (test-scale oracles only).
+    *
+    * Plan: the capped self-join of [[sharedKeyCounts]] — two shuffles
+    * of 8-byte (sh, id) rows, then a map-side-combinable partial count
+    * per pair, so no group is ever materialized in one row and
+    * per-task memory is flat no matter how hot a shingle runs. The
+    * grouped alternative (one shuffle on sh, every in-group pair
+    * expanded inside the group row) measured 2.4 s vs 1.8 s at sf0.1
+    * and builds ~m²/2 structs in a single row — ~500k at the default
+    * cap — a memory spike this plan never takes.
     */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.6,
       maxDocFreq: Long = 1000): DataFrame =
-    ngramJaccardPairsSelfJoin(df, idCol, textCol, n, threshold, maxDocFreq)
-
-  /** The grouped-expansion alternative to the self-join plan: ONE
-    * shuffle on the 8-byte shingle hash, then every in-group pair is
-    * expanded inside the group row (`transform`/`slice` over the
-    * sorted id list). The failure mode that demoted it from default:
-    * a shingle of m docs builds ~m²/2 structs in a SINGLE row with no
-    * partial aggregation — at the 1000-doc default cap that is ~500k
-    * structs in one task's lap, a memory spike the self-join plan
-    * never takes (its pair stream is never held per-group). A/B at
-    * warm sessions (ScaleProbe `ab`, 2026-08-12): grouped 2.4 s
-    * (sf0.1) / 7.3–9.9 s (sf1) vs self-join 1.8 s / 7.2–8.2 s — the
-    * self-join wins at both scales AND has the safer worst case.
-    */
-  def ngramJaccardPairsGrouped(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.6,
-      maxDocFreq: Long = 1000): DataFrame = {
-    val sets = docShingleSets(df, idCol, textCol, n).localCheckpoint()
-    val idx = explodeSets(sets)
-    val sizes = sets.select(col("id"), size(col("shs")).cast("long").as("sz"))
-    val grouped = idx.groupBy(col("sh"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-    val capped = if (maxDocFreq > 0) grouped.filter(size(col("ids")) <= maxDocFreq)
-                 else grouped
-    val inter = capped
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+    sharedKeyCounts(docShingleSets(df, idCol, textCol, n).localCheckpoint(),
+        maxDocFreq)
       .withColumn("jaccard",
         round(col("inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
-  /** Winnow-fingerprint overlap pairs — the MOSS-style document-pair
-    * detector: docs sharing ≥ `minShared` winnowing fingerprints
-    * (each fingerprint witnesses a shared run of ≥ n+w−1 tokens, so
-    * `n_shared` approximates how much VERBATIM material two docs
-    * share, where Jaccard measures set similarity). Same inverted-
-    * index plan as [[ngramJaccardPairsSelfJoin]] but over the winnowed
-    * fingerprint set — ~2/(w+1) the index size of the full shingle
-    * index, which is the point of winnowing at corpus scale: the
-    * self-join and both shuffles shrink by the same factor while the
-    * shared-substring guarantee holds. Hot boilerplate fingerprints
-    * drop via the same anti-join doc-frequency cap. The md5 hash
-    * domain matches [[graft.text.TextAnalysis.winnowFingerprintsMd5]]
-    * so the DuckDB twin replays the chain exactly; a production
-    * deployment uses the xxhash64 domain (8-byte keys) — identical
-    * plan, smaller rows.
+  /** The capped inverted-index self-join over a pinned per-doc set
+    * frame (id, shs: array of DISTINCT keys): (id_a, id_b, inter,
+    * sz_a, sz_b) for every pair id_a < id_b sharing at least one key
+    * whose doc frequency is ≤ `maxDocFreq` (0 = no cap), `inter` =
+    * number of such shared keys, `sz_*` = each doc's FULL set size.
+    *
+    *  - The keep-list holds the keys with 2 ≤ df (≤ cap): a df = 1 key
+    *    self-joins only with itself (dropped by id_a < id_b), so
+    *    pruning it BEFORE the self-join is lossless and, in real text
+    *    where most shingles are unique, empties the bulk of both join
+    *    inputs (guide §3.2's pre-filter idea, with an exact list
+    *    instead of a Bloom filter). The cap is a semi-join against it,
+    *    never a per-group row.
+    *  - Each index row CARRIES its doc's set size (8 bytes), computed
+    *    before the cap, so the per-pair sizes fall out of the count
+    *    aggregate (min(sz) — constant per doc, free in the partial
+    *    aggregate) instead of two pair-scale sizes joins. A caller
+    *    that reads no size ([[winnowPairs]]) pays nothing: Catalyst
+    *    prunes the unused mins and the size projection.
     */
-  def winnowPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, w: Int = 4, minShared: Long = 5,
-      maxDocFreq: Long = 1000): DataFrame = {
-    // checkpoint the per-doc fingerprint ARRAYS (winnow output is
-    // already distinct per doc) and explode per consumer — the pinned
-    // bytes shrink to one row per doc instead of one per fingerprint
-    val fps = df.select(col(idCol).as("id"),
-        TextAnalysis.winnowFingerprintsMd5(col(textCol), n, w).as("fps"))
-      .localCheckpoint() // feeds the hot-list aggregate AND the self-join
-    val idx = fps.select(col("id"), explode(col("fps")).as("fp"))
-    // fingerprints are distinct per doc by construction, so the plain
-    // count IS the doc frequency. r14: keep-list of 2 <= df (<= cap) —
-    // a single-doc fingerprint cannot produce a cross pair, so pruning
-    // it before the self-join is lossless (see ngramJaccardPairsSelfJoin)
-    val df0 = idx.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-    val keep = (if (maxDocFreq > 0) df0.filter(col("df") <= maxDocFreq) else df0)
-      .filter(col("df") >= 2).select(col("fp"))
-    val capped = idx.join(keep, Seq("fp"), "left_semi")
-    capped.select(col("fp"), col("id").as("id_a"))
-      .join(capped.select(col("fp"), col("id").as("id_b")), "fp")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).cast("long").as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  /** The production Jaccard-pairs plan: pair counts from
-    * `idx ⋈ idx ON sh` — two shuffles of 8-byte (sh, id) rows, then a
-    * map-side-combinable partial count per pair. The doc-frequency cap
-    * is an anti-join against the hot-shingle list, so no group is ever
-    * materialized in one row; per-task memory is flat no matter how
-    * hot a shingle runs. Won the A/B vs the grouped expansion at both
-    * measured scales (see [[ngramJaccardPairsGrouped]]).
-    */
-  def ngramJaccardPairsSelfJoin(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.6,
-      maxDocFreq: Long = 1000): DataFrame = {
-    // r14: pin the compact per-doc set frame (array rows, a fraction of
-    // the exploded index's bytes) and derive the index + sizes from it
-    // — sizes become size(shs), a projection instead of a groupBy
-    // exchange over the whole index.
-    val sets = docShingleSets(df, idCol, textCol, n).localCheckpoint()
-    // r15: each index row CARRIES its doc's full set size (8 bytes) —
-    // the per-pair sizes then fall out of the intersection-count
-    // aggregate (min(sz) — constant per doc, so the partial aggregate
-    // combines it for free), removing BOTH pair-scale sizes joins the
-    // r14 shape paid (each re-shuffled the pair table by one id side
-    // at corpus scale). Sizes are computed BEFORE the cap, so the cap
-    // still drops hot shingles from intersection counting only.
+  private def sharedKeyCounts(sets: DataFrame, maxDocFreq: Long): DataFrame = {
     val idx = sets.select(col("id"),
       size(col("shs")).cast("long").as("sz"), explode(col("shs")).as("sh"))
-    // r14: the survivor list is the shingles with 2 <= df (<= cap) —
-    // a df = 1 shingle self-joins only with itself (dropped by the
-    // id_a < id_b filter), so pruning it BEFORE the self-join is
-    // lossless and, in real text where most shingles are unique,
-    // empties the bulk of both join inputs (guide §3.2's pre-filter
-    // idea, with an exact list instead of a Bloom filter).
     val df0 = idx.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val keep = (if (maxDocFreq > 0) df0.filter(col("df") <= maxDocFreq) else df0)
       .filter(col("df") >= 2).select(col("sh"))
@@ -225,11 +148,35 @@ object ScaleDedup {
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("inter"),
         min(col("sz_a")).as("sz_a"), min(col("sz_b")).as("sz_b"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** Winnow-fingerprint overlap pairs — the MOSS-style document-pair
+    * detector: docs sharing ≥ `minShared` winnowing fingerprints
+    * (each fingerprint witnesses a shared run of ≥ n+w−1 tokens, so
+    * `n_shared` approximates how much VERBATIM material two docs
+    * share, where Jaccard measures set similarity). Same capped
+    * inverted-index self-join as [[ngramJaccardPairs]] but over the
+    * winnowed fingerprint set — ~2/(w+1) the index size of the full
+    * shingle index, which is the point of winnowing at corpus scale:
+    * the self-join and both shuffles shrink by the same factor while
+    * the shared-substring guarantee holds. The md5 hash domain matches
+    * [[graft.text.TextAnalysis.winnowFingerprintsMd5]] so the DuckDB
+    * twin replays the chain exactly; a production deployment uses the
+    * xxhash64 domain (8-byte keys) — identical plan, smaller rows.
+    */
+  def winnowPairs(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int = 3, w: Int = 4, minShared: Long = 5,
+      maxDocFreq: Long = 1000): DataFrame = {
+    // checkpoint the per-doc fingerprint ARRAYS (winnow output is
+    // already distinct per doc) — the pinned bytes are one row per doc
+    // instead of one per fingerprint
+    val fps = df.select(col(idCol).as("id"),
+        TextAnalysis.winnowFingerprintsMd5(col(textCol), n, w).as("shs"))
+      .localCheckpoint() // feeds the hot-list aggregate AND the self-join
+    sharedKeyCounts(fps, maxDocFreq)
+      .filter(col("inter") >= minShared)
+      .select(col("id_a"), col("id_b"), col("inter").as("n_shared"))
   }
 
   /** EXACT-threshold Jaccard pairs via prefix filtering — the lossless
@@ -243,7 +190,7 @@ object ScaleDedup {
     * the smaller prefix-max, but a doc has only ⌈t·|d|⌉ − 1 such
     * elements, fewer than the ≥ t·|d| common ones J ≥ t guarantees.
     * So the prefix self-join finds EVERY qualifying pair, and the
-    * exact [[verifyJaccardPairs]] pass makes the output identical to
+    * exact [[verifyJaccardSets]] pass makes the output identical to
     * the uncapped all-pairs form — while hot stop-shingles (df-MAX
     * under the ordering) fall at the END of every doc's ranking and
     * almost never enter a prefix: the quadratic stop-shingle
@@ -346,34 +293,17 @@ object ScaleDedup {
     * duplicates (a doc wholly contained in a longer one) that
     * symmetric Jaccard misses: a prefix half of a doc has containment
     * 1.0 into its source but Jaccard ≈ 0.5, below any useful
-    * threshold. Same index self-join machinery as
-    * [[ngramJaccardPairsSelfJoin]] (two 8-byte shuffles, partial-
-    * aggregatable intersection counts, anti-join doc-frequency cap);
-    * each surviving unordered pair emits up to two directed
-    * (id_sub ⊆ id_super) rows.
+    * threshold. Same capped index self-join as [[ngramJaccardPairs]]
+    * ([[sharedKeyCounts]]: two 8-byte shuffles, partial-aggregatable
+    * intersection counts, semi-join doc-frequency cap); each surviving
+    * unordered pair emits up to two directed (id_sub ⊆ id_super) rows.
     */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.9,
-      maxDocFreq: Long = 1000): DataFrame = {
-    val sets = docShingleSets(df, idCol, textCol, n).localCheckpoint()
-    // r15: sizes ride the index rows through the self-join (see
-    // ngramJaccardPairsSelfJoin) — both pair-scale sizes joins gone.
-    val idx = sets.select(col("id"),
-      size(col("shs")).cast("long").as("sz"), explode(col("shs")).as("sh"))
-    // keep-list of 2 <= df (<= cap): lossless self-join pre-filter, see
-    // ngramJaccardPairsSelfJoin
-    val df0 = idx.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val keep = (if (maxDocFreq > 0) df0.filter(col("df") <= maxDocFreq) else df0)
-      .filter(col("df") >= 2).select(col("sh"))
-    val capped = idx.join(keep, Seq("sh"), "left_semi")
-    capped.select(col("sh"), col("id").as("id_a"), col("sz").as("sz_a"))
-      .join(capped.select(col("sh"), col("id").as("id_b"), col("sz").as("sz_b")),
-        "sh")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"),
-        min(col("sz_a")).as("sz_a"), min(col("sz_b")).as("sz_b"))
+      maxDocFreq: Long = 1000): DataFrame =
+    sharedKeyCounts(docShingleSets(df, idCol, textCol, n).localCheckpoint(),
+        maxDocFreq)
       .select(explode(array(
         struct(col("id_a").as("id_sub"), col("id_b").as("id_super"),
           round(col("inter").cast("double") / col("sz_a"), 6).as("containment")),
@@ -381,7 +311,6 @@ object ScaleDedup {
           round(col("inter").cast("double") / col("sz_b"), 6).as("containment")))).as("p"))
       .select(col("p.id_sub"), col("p.id_super"), col("p.containment"))
       .filter(col("containment") >= threshold)
-  }
 
   /** Source-level contamination matrix: directed shingle containment
     * |S(a) ∩ S(b)| / |S(a)| between source-level shingle SETS — the
@@ -577,92 +506,32 @@ object ScaleDedup {
         (size(col("toks")) - size(col("kept"))).cast("long").as("n_dropped"))
   }
 
-  /** Per-doc hashed shingle set (id, shs) — the verify-side operand for
-    * candidate-bounded exact Jaccard.
-    */
-  def shingleSets(index: DataFrame): DataFrame =
-    index.groupBy(col("id"))
-      .agg(collect_set(col("sh")).as("shs"))
-
-  /** Exact Jaccard evaluated ONLY for the given candidate pairs: two
-    * equi-joins attach each side's shingle set, the intersection runs
-    * inside codegen. Cost is bounded by |candidates| — this is the
-    * verification stage an LSH pass is supposed to buy, never a
-    * full-corpus pair expansion.
+  /** Exact Jaccard evaluated ONLY for the given candidate pairs over
+    * a doc-set frame ([[docShingleSets]]' sorted-distinct arrays):
+    * one pair of equi-joins attaches each side's size and set, the
+    * intersection runs inside codegen. Cost is bounded by
+    * |candidates| — this is the verification stage an LSH pass is
+    * supposed to buy, never a full-corpus pair expansion.
     *
     * Skew gate: the array path hash-partitions pairs by doc id, so a
     * pathological doc (tens of thousands of shingles × hundreds of
     * candidate partners) funnels ALL its pairs into one task, each row
     * carrying the full set array (~50k-long) — a single-task hotspot
     * with giant rows. Pairs where EITHER side's set exceeds
-    * `largeSetGate` instead verify through the index itself: join the
-    * pair list to the (id, sh) index on both sides and count matching
-    * shingles per pair — the same total volume, but spread across the
-    * cluster by (id, sh) with map-side-combinable counts and 24-byte
-    * rows, no giant arrays. Both paths are EXACT; results are
-    * identical (a zero-intersection large pair drops out of the count
-    * join, which any threshold > 0 filters anyway — asserted).
+    * `largeSetGate` instead verify through the exploded index: join
+    * the pair list to the (id, sh) rows on both sides and count
+    * matching shingles per pair — the same total volume, but spread
+    * across the cluster by (id, sh) with map-side-combinable counts
+    * and 24-byte rows, no giant arrays. Both branches are EXACT;
+    * results are identical (a zero-intersection large pair drops out
+    * of the count join, which any threshold > 0 filters anyway —
+    * asserted).
     *
-    * Precondition: `index` must be DISTINCT (id, sh) rows — the
-    * [[shingleIndex]] contract. Set sizes are `count(*)` over index
-    * rows (not `count_distinct`, which would force a second distinct
-    * aggregation the index already paid for); a non-deduplicated index
-    * would silently inflate sizes AND intersection counts on BOTH
-    * verify paths.
-    *
-    * `cand` (the size-annotated candidate list) feeds both the small-
-    * and large-set branches, so it is localCheckpoint'ed: unpinned,
-    * the whole LSH band-join lineage appeared once per branch in the
-    * plan (AQE exchange reuse happened to deduplicate it locally, but
-    * that reuse is an optimizer courtesy, not a contract).
-    */
-  def verifyJaccardPairs(
-      candidates: DataFrame, index: DataFrame, threshold: Double,
-      largeSetGate: Int = 8192): DataFrame = {
-    require(threshold > 0,
-      "verifyJaccardPairs needs threshold > 0 (zero-intersection pairs drop out)")
-    val sizes = index.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val cand = candidates.select(col("id_a"), col("id_b"))
-      .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .localCheckpoint()
-    def jaccardOf(inter: Column, szA: Column, szB: Column): Column =
-      round(inter.cast("double") / (szA + szB - inter), 6)
-
-    val sets = shingleSets(index)
-    val small = cand
-      .filter(col("sz_a") <= largeSetGate && col("sz_b") <= largeSetGate)
-      .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
-      .withColumn("inter",
-        size(array_intersect(col("shs_a"), col("shs_b"))).cast("long"))
-      .select(col("id_a"), col("id_b"),
-        jaccardOf(col("inter"), col("sz_a"), col("sz_b")).as("jaccard"))
-
-    val largePairs = cand
-      .filter(col("sz_a") > largeSetGate || col("sz_b") > largeSetGate)
-    val largeInter = largePairs.select(col("id_a"), col("id_b"))
-      .join(index.select(col("id").as("id_a"), col("sh")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    val large = largePairs
-      .join(largeInter, Seq("id_a", "id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccardOf(col("inter"), col("sz_a"), col("sz_b")).as("jaccard"))
-
-    small.unionByName(large)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** [[verifyJaccardPairs]] over a doc-set frame — the r14 hot path.
-    * Same two-branch exact verify, but sizes are `size(shs)` (a
-    * projection — the exploded form paid a full groupBy exchange) and
-    * the small branch attaches the checkpointed set arrays directly
-    * (the exploded form re-built them with a collect_set exchange).
-    * Only the large branch still explodes. Output is identical: both
-    * branches compute the same exact Jaccard over the same sets.
+    * The size-annotated candidate list feeds both branches, so it is
+    * localCheckpoint'ed: unpinned, the whole LSH band-join lineage
+    * appeared once per branch in the plan (AQE exchange reuse happened
+    * to deduplicate it locally, but that reuse is an optimizer
+    * courtesy, not a contract).
     */
   def verifyJaccardSets(
       candidates: DataFrame, sets: DataFrame, threshold: Double,
@@ -722,38 +591,15 @@ object ScaleDedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** MinHash signature: k independent permutations simulated as
-    * xxhash64 with per-slot salts over the 8-byte shingle hash (an
-    * equally valid permutation family, at long-rehash cost instead of
-    * string-rehash); one aggregation produces all slots.
-    *
-    * Repartition-by-id BEFORE the wide-state aggregation: a plain
-    * groupBy over the exploded index plans a map-side partial
-    * aggregate whose per-task hash map spans up to EVERY doc group
-    * (k mins ≈ 8k bytes of state each — ~3 GB/task at 5.7M docs,
-    * k=64), for a combine that buys almost nothing because shingle
-    * rows have zero group locality before the shuffle. Pre-hashing
-    * the rows onto their reducer bounds the map by groups-per-
-    * partition instead of groups-per-corpus at the cost of shuffling
-    * raw (id, sh) rows — 16 bytes each — rather than ~1.6×-combined
-    * ones: the trade that stays flat at ANY corpus size (found as an
-    * AGGREGATE_OUT_OF_MEMORY at the 5.7M-doc 1000× replica; the
-    * partial+final pair still plans, but both run co-located after
-    * the exchange, each map bounded by its own partition's groups).
-    */
-  def minhashSignatures(index: DataFrame, k: Int = 16): DataFrame =
-    index.repartition(col("id")).groupBy(col("id"))
-      .agg(array((0 until k).map(i =>
-        min(xxhash64(lit(i), col("sh")))): _*).as("sig"))
-
-  /** MinHash signatures straight off a doc-set frame — the r14 hot
-    * path: the whole signature is ONE codegen'd pass over the in-row
-    * array (precomputed slot seeds, tight primitive loop), so the
-    * repartition + k-buffer aggregation the exploded form needs — and
-    * its per-task agg-map memory story at corpus scale — disappears
-    * entirely. Values are bit-identical to [[minhashSignatures]]
-    * (pinned by ShingleMinHashSpec); docs with empty sets are dropped
-    * exactly like docs with no index rows.
+  /** MinHash signatures off a doc-set frame: k independent
+    * permutations simulated as xxhash64 with per-slot salts over the
+    * 8-byte shingle hash (slot i = min over the set of
+    * `xxhash64(i, sh)`), computed in ONE codegen'd pass over the in-row
+    * array (precomputed slot seeds, tight primitive loop) — no shuffle
+    * and no k-buffer aggregation. Values are bit-identical to the
+    * per-slot `min(xxhash64(lit(i), sh))` aggregate over the exploded
+    * index (pinned by ShingleMinHashSpec); docs with empty sets are
+    * dropped.
     */
   def minhashSignaturesOfSets(sets: DataFrame, k: Int = 16): DataFrame =
     sets.filter(size(col("shs")) > 0)
@@ -889,7 +735,7 @@ object ScaleDedup {
     nearDupPairsPlanned(df, idCol, textCol, n, threshold, missBound, rows)
   }
 
-  /** (id, band, band_hash) LSH bucket keys over a shingle index —
+  /** (id, band, band_hash) LSH bucket keys off a doc-set frame —
     * shared by the self-join candidate path and the asymmetric
     * new-vs-reference path. rows = k/bands sets the LSH S-curve
     * threshold at (1/bands)^(1/rows) — e.g. bands=8, rows=2 → ≈0.35,
@@ -898,40 +744,28 @@ object ScaleDedup {
     * XXH64 oracle (minhashBandedCtes) — do not change one without
     * the other.
     */
-  def bandHashes(index: DataFrame, k: Int, bands: Int): DataFrame =
-    bandExplode(minhashSignatures(index, k), k, bands)
-
-  /** Band hashes off a doc-set frame (see
-    * [[minhashSignaturesOfSets]]). The band string/hash construction
-    * is shared with [[bandHashes]] — the DuckDB XXH64 oracle replays
-    * it verbatim.
-    */
   def bandHashesOfSets(sets: DataFrame, k: Int, bands: Int): DataFrame =
-    bandExplode(minhashSignaturesOfSets(sets, k), k, bands)
+    bandExplode(minhashSignaturesOfSets(sets, k), bands)
 
   /** The shared (id, band, band_hash) construction over (id, sig)
-    * rows: comma-joined signed band strings, `xxhash64(band, str)` —
+    * rows (rows per band = signature length / `bands`): comma-joined
+    * signed band strings, `xxhash64(band, str)` —
     * replayed verbatim by the DuckDB oracle (minhashBandedCtes); do
     * not change one without the other. r15: one codegen'd pass
     * ([[graft.functions.BandHashes]], bit-parity with the r13/r14
     * HOF chain pinned by ShingleMinHashSpec — the interpreted chain
     * allocated a slice + per-slot strings + a concat per band).
     */
-  private[graft] def bandExplode(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+  private[graft] def bandExplode(sigs: DataFrame, bands: Int): DataFrame =
     sigs.select(col("id"),
       posexplode(graft.functions.GraftFunctions.bandHashes(col("sig"), bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
 
-  /** LSH candidate pairs from a prebuilt (id, shingle) index: band the
-    * signature (bands × rowsPerBand = k), hash each band, join docs
-    * sharing any band bucket. Then verify with exact Jaccard
-    * ([[verifyJaccardPairs]]) if precision matters.
+  /** LSH candidate pairs off a doc-set frame: band the signature
+    * (bands × rowsPerBand = k), hash each band, join docs sharing any
+    * band bucket. Then verify with exact Jaccard
+    * ([[verifyJaccardSets]]) if precision matters.
     */
-  def minhashCandidatesFromIndex(
-      index: DataFrame, k: Int = 16, bands: Int = 8): DataFrame =
-    bandSelfJoin(bandHashes(index, k, bands))
-
-  /** LSH candidate pairs off a doc-set frame. */
   def minhashCandidatesFromSets(
       sets: DataFrame, k: Int = 16, bands: Int = 8): DataFrame =
     bandSelfJoin(bandHashesOfSets(sets, k, bands))
@@ -944,8 +778,8 @@ object ScaleDedup {
     // no shuffle exists to share; the optimizer then drops the
     // repartition), and with broadcast forced off the repartition form
     // measured 2.5× SLOWER than this aliased form with no
-    // ReusedExchange materializing (`ScaleProbe bandreuse`, identical
-    // 44,741-pair output). Keep the plain aliased self-join.
+    // ReusedExchange materializing (identical 44,741-pair output).
+    // Keep the plain aliased self-join.
     val l = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
     val r = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
     l.join(r, Seq("band", "band_hash"))
@@ -960,18 +794,18 @@ object ScaleDedup {
     * Returns (id_ref, id_new, jaccard) for every cross pair at or
     * above `threshold`.
     *
-    * Shape: both sides build the standard shingle index; candidates
+    * Shape: both sides build the standard doc-set frame; candidates
     * come from an ASYMMETRIC band join (new × ref only — no new×new,
     * no ref×ref, so candidate volume is proportional to true cross
     * duplication, not corpus size), then the exact-Jaccard verify
-    * runs over the unioned index. At 100 TB the reference side's
-    * index and band hashes are write-once artifacts: nothing here
+    * runs over the unioned set frames. At 100 TB the reference side's
+    * sets and band hashes are write-once artifacts: nothing here
     * recomputes per batch except the (small) new side and the
     * cross join on (band, band_hash) — which Catalyst plans as a
     * plain equi-join, broadcastable when the batch is small.
     *
     * Caller contract: id spaces of the two sides are disjoint (the
-    * verify pass unions both indexes; colliding ids would merge
+    * verify pass unions both set frames; colliding ids would merge
     * shingle sets across sides and inflate sizes).
     */
   def dedupAgainstReference(
@@ -1006,8 +840,16 @@ object ScaleDedup {
       .withColumn("h", xxhash64(col("token")))
     val votes = (0 until 64).map(j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v$j"))
-    // Same wide-state-aggregation shape as minhashSignatures (64 sums
-    // per doc over exploded tokens): bound the agg map per partition.
+    // Repartition by id BEFORE the wide-state aggregation (64 sums per
+    // doc over exploded tokens): a plain groupBy plans a map-side
+    // partial aggregate whose per-task hash map spans up to EVERY doc
+    // group, for a combine that buys almost nothing because token rows
+    // have zero group locality before the shuffle. Pre-hashing rows
+    // onto their reducer bounds the map by groups-per-partition
+    // instead of groups-per-corpus at the cost of shuffling raw rows —
+    // the trade that stays flat at any corpus size (the exploded-index
+    // MinHash aggregate of the same shape died with
+    // AGGREGATE_OUT_OF_MEMORY at the 5.7M-doc 1000× replica).
     tok.repartition(col("id")).groupBy(col("id")).agg(votes.head, votes.tail: _*)
       .withColumn("simhash",
         (0 until 64).map(j =>
@@ -1063,8 +905,8 @@ object ScaleDedup {
     * (id, canonical_id) for every input doc; `filter(id ===
     * canonical_id)` yields the deduped corpus.
     *
-    * Shuffle budget: one shingle explode feeds both stages (the index
-    * is localCheckpoint'ed), signatures (1 agg) + band join (1) +
+    * Shuffle budget: one in-row doc-set frame feeds both stages (it
+    * is localCheckpoint'ed), in-row signatures (0) + band join (1) +
     * candidate-bounded verify (2 equi-joins) + CC over the duplicate
     * graph. The exact-Jaccard pass never touches non-candidate pairs —
     * at 100 TB the LSH stage is what makes verification affordable.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.Platform
 
 /** All LSH band hashes of a MinHash signature in ONE codegen'd pass —
-  * bit-parity with the HOF chain in `ScaleDedup.bandExplode`:
+  * bit-parity with the HOF chain it replaced:
   * `transform(sequence(0, bands-1), b => xxhash64(b, concat_ws(",",
   *   transform(slice(sig, b*rows+1, rows), _.cast("string")))))`
   * with `rows = sig.length / bands`.

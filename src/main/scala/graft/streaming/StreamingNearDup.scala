@@ -19,10 +19,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ops are the banding explode and the per-bucket state shuffle.
   * State per bucket is ONE boolean, so total state is bounded by the
   * number of distinct occupied buckets (≤ bands × docs, 8-byte keys),
-  * not by corpus text. Bit-parity with the batch path: identical hash
-  * chain to `ScaleDedup.minhashSignatures`/`minhashCandidatesFromIndex`
-  * (`xxhash64(slot, sh)` salted rehash, comma-joined signed band
-  * strings, `xxhash64(band, str)`).
+  * not by corpus text. Bit-parity with the batch path: the same
+  * `minhash_sig` and `band_hashes` expressions as
+  * `ScaleDedup.bandHashesOfSets` (`xxhash64(slot, sh)` salted rehash,
+  * comma-joined signed band strings, `xxhash64(band, str)`).
   *
   * A doc's verdict is per-band here; `ANY(first = false)` downstream
   * marks the doc a candidate for exact verification — same contract
@@ -35,17 +35,16 @@ object StreamingNearDup {
 
   /** (doc_id, band, band_hash) rows from raw (doc_id, text) — pure
     * projection + one posexplode; plan-identical on batch and stream.
-    * Docs with no shingle (< n tokens) are dropped, matching the batch
-    * index path where they never produce index rows.
+    * Docs with no shingle (< n tokens) are dropped, as the batch
+    * [[graft.dedup.ScaleDedup.bandHashesOfSets]] drops empty sets.
     */
   def bandRows(docs: DataFrame, idCol: String, textCol: String,
                n: Int = 3, k: Int = 16, bands: Int = 8): DataFrame = {
-    val rows = k / bands
-    // r14: the hashed-shingle pass and the k-slot mins are ONE
-    // codegen'd expression each (shingle_hashes + minhash_sig,
-    // bit-parity with the interpreted HOF chain this replaces — pinned
-    // by ShingleMinHashSpec), so the signature costs one window-hash
-    // pass plus a primitive k×|shingles| loop per row.
+    // the hashed-shingle pass, the k-slot mins and the band hashes are
+    // ONE codegen'd expression each (shingle_hashes, minhash_sig,
+    // band_hashes — bit-parity with the interpreted HOF chains they
+    // replace, pinned by ShingleMinHashSpec), so a doc costs one
+    // window-hash pass plus a primitive k×|shingles| loop.
     val shs = graft.functions.GraftFunctions.shingleHashes(
       graft.text.TextAnalysis.tokens(col(textCol)), n)
     docs
@@ -54,9 +53,7 @@ object StreamingNearDup {
       .select(col("doc_id"),
         graft.functions.GraftFunctions.minhashSig(col("_shs"), k).as("sig"))
       .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, concat_ws(",",
-            transform(slice(col("sig"), b * rows + 1, lit(rows)), _.cast("string")))))))
+        posexplode(graft.functions.GraftFunctions.bandHashes(col("sig"), bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 

@@ -197,15 +197,24 @@ class ScaleDedupSpec extends AnyFunSuite {
     val expected = Map(-9L -> -9L, -5L -> -5L, -3L -> -5L, 2L -> -5L,
       7L -> -5L, 11L -> 11L) ++
       Seq(Long.MinValue, -1L, 0L, Long.MaxValue).map(_ -> Long.MinValue)
+    // string keys: U+FF21 sorts before U+1F600 in UTF-8 byte order
+    // (Spark, DuckDB) but after it in Java's UTF-16 String order
+    val (fullA, grin) = ("\uFF21", "\uD83D\uDE00")
+    val strIds = Seq(fullA, grin).toDF("id")
+    val strPairs = Seq((grin, fullA)).toDF("id_a", "id_b")
     for (threshold <- Seq(1000000, 0)) {
       val got = Components.canonical(ids, pairs, threshold)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected, s"driverCcThreshold=$threshold")
+      val gotStr = Components.canonical(strIds, strPairs, threshold)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(gotStr === Map(fullA -> fullA, grin -> fullA),
+        s"string keys, driverCcThreshold=$threshold")
     }
   }
 
-  test("verifyJaccardPairs is candidate-bounded: output is a subset of candidates") {
-    val idx = ScaleDedup.shingleIndex(docs, "doc_id", "text", 3)
+  test("verifyJaccardSets is candidate-bounded: output is a candidate subset") {
+    val sets = ScaleDedup.docShingleSets(docs, "doc_id", "text", 3)
     val all = ScaleDedup.ngramJaccardPairs(docs, "doc_id", "text",
       n = 3, threshold = 0.5, maxDocFreq = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -217,13 +226,13 @@ class ScaleDedupSpec extends AnyFunSuite {
     }.toSet
     import spark.implicits._
     val cands = half.toSeq.toDF("id_a", "id_b")
-    val verified = ScaleDedup.verifyJaccardPairs(cands, idx, threshold = 0.5)
+    val verified = ScaleDedup.verifyJaccardSets(cands, sets, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(verified.keySet === half)
     verified.foreach { case (p, j) => assert(j === all(p), s"jaccard differs for $p") }
   }
 
-  test("verifyJaccardPairs size-gates hot docs: index path equals array path") {
+  test("verifyJaccardSets size-gates hot docs: index path equals array path") {
     import spark.implicits._
     // the round-4 watch item made concrete: ONE pathological doc with
     // ~50k shingles and 1000 candidate partners. Under the array path
@@ -237,11 +246,11 @@ class ScaleDedupSpec extends AnyFunSuite {
       (i.toLong, toks.slice(i * 40, i * 40 + 60).mkString(" "))
     }
     val docs = spark.createDataset(hot +: partners).toDF("doc_id", "text")
-    val idx = ScaleDedup.shingleIndex(docs, "doc_id", "text", 3)
+    val sets = ScaleDedup.docShingleSets(docs, "doc_id", "text", 3)
     val cands = spark.createDataset((1 to 1000).map(i => (0L, i.toLong)))
       .toDF("id_a", "id_b")
     def run(gate: Int): Map[(Long, Long), Double] =
-      ScaleDedup.verifyJaccardPairs(cands, idx, threshold = 0.0005,
+      ScaleDedup.verifyJaccardSets(cands, sets, threshold = 0.0005,
           largeSetGate = gate)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val gated = run(8192)           // hot doc crosses the gate

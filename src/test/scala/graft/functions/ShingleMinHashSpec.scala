@@ -76,7 +76,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
         .minhashSignaturesOfSets(
           ScaleDedup.docShingleSets(df, "doc_id", "text", 3), k)
         .localCheckpoint()
-      val fast = ScaleDedup.bandExplode(sigs, k, bands)
+      val fast = ScaleDedup.bandExplode(sigs, bands)
       val ref = HofReferences.bandExplodeHof(sigs, k, bands)
       val joined = fast.withColumnRenamed("band_hash", "fast_bh")
         .join(ref.withColumnRenamed("band_hash", "ref_bh"),

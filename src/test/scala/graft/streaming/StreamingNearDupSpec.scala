@@ -63,6 +63,12 @@ class StreamingNearDupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     q.stop()
     assert(streamed === batch)
+    // ... and to the batch LSH stage's band keys at the same (k, bands)
+    val batchLsh = graft.dedup.ScaleDedup.bandHashesOfSets(
+        graft.dedup.ScaleDedup.docShingleSets(docs, "doc_id", "text", 3), 16, 8)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(batchLsh.nonEmpty)
+    assert(streamed === batchLsh)
   }
 
   test("shingle-less docs never reach the state store") {
