@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Typed readers for the driver-generated star schema (TESTDATA.md).
@@ -7,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All reads are plain parquet scans so Catalyst can push filters and
   * prune columns down to the file scan — at 100 TB the scan is the
   * dominant cost and `PushedFilters`/`ReadSchema` must stay tight.
+  * The read schema is inferred once per file set ([[readParquet]]).
   */
 object Tables {
   import org.apache.spark.sql.types._
@@ -200,9 +202,64 @@ object Tables {
       }
     }
 
+  /** What schema inference returned for one file set under one conf. */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+                                    confs: Map[String, String], schema: StructType)
+
+  /** One entry per qualified table path; a new file set or conf
+    * replaces it, so the memo holds at most one schema per path.
+    * Concurrent: dashboard clients share one session.
+    */
+  private val inferred = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
+
+  /** Every file under `path` (itself, if it is a file) as (name,
+    * length, modification time), sorted. `listStatus`, not
+    * `listFiles`: building a `LocatedFileStatus` loads permissions,
+    * which the local file system without native IO does by launching
+    * a subprocess per file.
+    */
+  private def listing(fs: FileSystem, path: Path): Seq[(String, Long, Long)] = {
+    def walk(p: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { s =>
+        if (s.isDirectory) walk(s.getPath)
+        else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+      }
+    walk(path).sorted
+  }
+
+  /** `spark.read.parquet(path)` without the one-task footer job that
+    * schema inference launches on every call: the schema inferred for
+    * this path is reused while a fresh listing of its files and the
+    * session's SQL conf snapshot (`nanosAsLong`, `inferTimestampNTZ`
+    * and `binaryAsString` all change what inference returns) both
+    * match the ones it was inferred under. The schema is not fixed in
+    * code because fixtures have shipped one column in several physical
+    * layouts (see [[events]]), which the normalizers branch on. A path
+    * that cannot be listed reads plainly, so a missing table still
+    * fails with `PATH_NOT_FOUND`.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = scala.util.Try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val qualified = fs.makeQualified(p)
+      (qualified.toString, listing(fs, qualified))
+    }.toOption
+    key.fold(spark.read.parquet(path)) { case (qualified, files) =>
+      val confs = spark.sessionState.conf.getAllConfs
+      Option(inferred.get(qualified))
+        .filter(m => m.files == files && m.confs == confs)
+        .fold {
+          val df = spark.read.parquet(path)
+          inferred.put(qualified, Inferred(files, confs, df.schema))
+          df
+        }(m => spark.read.schema(m.schema).parquet(path))
+    }
+  }
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTimestamps(
-      normalizeNumerics(spark.read.parquet(s"$dir/$name.parquet"), name), name)
+      normalizeNumerics(readParquet(spark, s"$dir/$name.parquet"), name), name)
 
   def region(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "nation")

@@ -74,16 +74,17 @@ object Writers {
     * executor's own Configuration (site files on the executor
     * classpath), so writes land on the SHARED filesystem — java.nio
     * would scatter files across executor-local disks on a real
-    * cluster. Checksum side-files are disabled so the repository
-    * directory holds exactly the documents written.
+    * cluster. A checksummed file system (the local one) is unwrapped to
+    * its raw file system, so the repository directory holds exactly the
+    * documents written. Its checksum switches are not touched: the
+    * instance is the JVM-wide cached one that every Spark write shares.
     */
-  private[sources] def taskFs(path: String): org.apache.hadoop.fs.FileSystem = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.setWriteChecksum(false)
-    fs.setVerifyChecksum(false)
-    fs
-  }
+  private[sources] def taskFs(path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(new org.apache.hadoop.conf.Configuration()) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
 
   /** Binary document-repository writer: one file per (`filename`,
     * `content` binary) row under `path` — the write half of the §1.1

@@ -38,6 +38,22 @@ class DownloadSinkSpec extends AnyFunSuite {
     assert(files === Array("Acme_Telecom_LLC_1.pdf", "Stratus_Networks_2.docx"))
   }
 
+  test("a download leaves checksum side files on for later Spark writes") {
+    // The sink's file system is the JVM-wide cached local one; switching
+    // its checksums off for the documents switched them off for every
+    // later write in the process.
+    val root = Files.createTempDirectory("dl_crc").toString
+    DownloadSink.run(
+      DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename")),
+      s"$root/downloads", fakeFetch)
+    Seq((1, "a")).toDF("k", "v").write.csv(s"$root/csv")
+    val written = new java.io.File(s"$root/csv").list()
+    assert(written.exists(n => n.startsWith(".part-") && n.endsWith(".csv.crc")),
+      s"no checksum side file among ${written.sorted.mkString(", ")}")
+    assert(new java.io.File(s"$root/downloads").list().sorted ===
+      Array("Acme_Telecom_LLC_1.pdf", "Stratus_Networks_2.docx"))
+  }
+
   test("bounded retry: transient failures succeed on the second attempt") {
     // fetcher fails the first call per URL within a task, succeeds
     // after — a transient-error simulation. The per-task map travels

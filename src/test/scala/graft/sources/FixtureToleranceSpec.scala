@@ -1,7 +1,13 @@
 package graft.sources
 
+import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
@@ -27,25 +33,29 @@ class FixtureToleranceSpec extends AnyFunSuite {
   /** Canonical events rows from the committed fixture (whatever layout
     * the driver shipped this round), as (event_id, micros) pairs.
     */
-  private lazy val canonical: Seq[(Long, Long)] =
-    Tables.events(spark, TestSpark.SfDir)
-      .select(col("event_id"), unix_micros(col("ts")).as("us"))
+  private lazy val canonical: Seq[(Long, Long)] = values(Tables.events(spark, TestSpark.SfDir))
+
+  private def values(events: DataFrame): Seq[(Long, Long)] =
+    events.select(col("event_id"), unix_micros(col("ts")).as("us"))
       .orderBy("event_id").limit(200)
       .as[(Long, Long)].collect().toSeq
 
-  /** Rewrite the fixture's events into `layout` under a temp dir and
-    * return that dir (shaped like an sfDir: contains events.parquet).
+  /** Rewrite the fixture's events into `layout` under `dir` (a fresh
+    * temp dir by default) and return that dir (shaped like an sfDir:
+    * contains events.parquet).
     */
-  private def writeLayout(layout: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-fixture-$layout").toString
+  private def writeLayout(layout: String, dir: String = ""): String = {
+    val into =
+      if (dir.nonEmpty) dir
+      else java.nio.file.Files.createTempDirectory(s"graft-fixture-$layout").toString
     val base = Tables.events(spark, TestSpark.SfDir)
     val out = layout match {
       case "tz-micros"  => base // session TZ is UTC; Spark writes isAdjustedToUTC micros
       case "ntz-micros" => base.withColumn("ts", col("ts").cast("timestamp_ntz"))
       case "nanos-long" => base.withColumn("ts", unix_micros(col("ts")) * 1000L)
     }
-    out.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
+    out.coalesce(1).write.mode("overwrite").parquet(s"$into/events.parquet")
+    into
   }
 
   for (layout <- Seq("tz-micros", "ntz-micros", "nanos-long")) {
@@ -54,10 +64,7 @@ class FixtureToleranceSpec extends AnyFunSuite {
       val df = Tables.events(spark, dir)
       assert(df.schema("ts").dataType === TimestampType,
         s"$layout: expected TimestampType, got ${df.schema("ts").dataType}")
-      val got = df.select(col("event_id"), unix_micros(col("ts")).as("us"))
-        .orderBy("event_id").limit(200)
-        .as[(Long, Long)].collect().toSeq
-      assert(got === canonical, s"$layout: values drifted from canonical read")
+      assert(values(df) === canonical, s"$layout: values drifted from canonical read")
     }
 
     test(s"event-family queries analyze against the $layout layout") {
@@ -69,5 +76,78 @@ class FixtureToleranceSpec extends AnyFunSuite {
         df.queryExecution.assertAnalyzed()
       }
     }
+  }
+
+  /** `body`'s result and the jobs started on this thread while it
+    * runs. The listener counts job starts carrying a tag unique to this
+    * call, up to a marker job: bus events arrive in order, so once the
+    * marker's end is seen every earlier start has been counted.
+    */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val started = new AtomicInteger
+    val markerId = new AtomicInteger(-1)
+    val markerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.test.tag")).foreach {
+          case `tag` => started.incrementAndGet()
+          case t if t == s"$tag-marker" => markerId.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId.get) markerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      val result = body
+      sc.setLocalProperty("graft.test.tag", s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job's end never arrived")
+      (result, started.get)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a second Tables read of unchanged files starts no job") {
+    val first = Tables.orders(spark, TestSpark.SfDir)
+    val (again, jobs) = withJobCount(Tables.orders(spark, TestSpark.SfDir))
+    assert(jobs === 0)
+    assert(again.schema === first.schema)
+  }
+
+  test("a table rewritten in place with another layout is inferred again") {
+    val dir = writeLayout("ntz-micros")
+    assert(values(Tables.events(spark, dir)) === canonical)
+    writeLayout("nanos-long", dir)
+    val df = Tables.events(spark, dir)
+    assert(df.schema("ts").dataType === TimestampType)
+    assert(values(df) === canonical, "nanos-long rewrite: values drifted from canonical read")
+  }
+
+  test("a conf that changes inference re-infers the read schema") {
+    // The fixture's ts is pyarrow micros without the UTC flag: NTZ by
+    // default, plain TIMESTAMP once NTZ inference is off.
+    def ntzCasts(df: DataFrame): Int = df.queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect {
+        case c: Cast if c.child.dataType == TimestampNTZType => c
+      })).size
+    assert(ntzCasts(Tables.events(spark, TestSpark.SfDir)) === 1,
+      "fixture events.ts is expected to be written as NTZ micros")
+    TestSpark.withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
+      val df = Tables.events(spark, TestSpark.SfDir)
+      assert(ntzCasts(df) === 0)
+      assert(values(df) === canonical)
+    }
+  }
+
+  test("a missing table still fails with PATH_NOT_FOUND") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fixture-missing").toString
+    val e = intercept[AnalysisException](Tables.orders(spark, dir))
+    assert(e.getCondition === "PATH_NOT_FOUND")
   }
 }
