@@ -32,6 +32,9 @@ object GraftSession {
       // read as raw longs, Tables' timestamp arm rebuilds them.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      // `file:` without a chmod or ls process per file or status
+      .config(s"spark.hadoop.${sources.Writers.LocalFsKey}",
+        classOf[sources.NioLocalFileSystem].getName)
       .withExtensions(new plans.GraftExtensions)
     if (shufflePartitions > 0)
       b.config("spark.sql.shuffle.partitions", shufflePartitions)

@@ -160,7 +160,8 @@ object Tables {
   /** Writer layouts observed or realistic for a canonical TIMESTAMP:
     * - TIMESTAMP: canonical, untouched.
     * - TIMESTAMP_NTZ (micros, no UTC flag): the session TZ is pinned
-    *   UTC, so the cast is a metadata-only relabel (bit-identical).
+    *   UTC, so the cast keeps every value bit-identical, but Spark
+    *   still evaluates it per row (`DateTimeUtils.convertTz`).
     * - long (TIMESTAMP(NANOS) via the legacy nanos-as-long conf that
     *   [[GraftSession]] sets): rebuild micros with integer
     *   division — `DIV`, not `/`, since double division loses
@@ -214,9 +215,9 @@ object Tables {
 
   /** Every file under `path` (itself, if it is a file) as (name,
     * length, modification time), sorted. `listStatus`, not
-    * `listFiles`: building a `LocatedFileStatus` loads permissions,
-    * which the local file system without native IO does by launching
-    * a subprocess per file.
+    * `listFiles`: it looks up no block locations, and builds no
+    * `LocatedFileStatus`, whose copy of a status loads its permission,
+    * owner and group.
     */
   private def listing(fs: FileSystem, path: Path): Seq[(String, Long, Long)] = {
     def walk(p: Path): Seq[(String, Long, Long)] =

@@ -2,7 +2,7 @@ package graft.etl
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Gold-layer enrichment (`code/enrich_data.py`), Spark-shaped.
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * the two halves the reference hand-codes:
   *
   *  - J2 cache join: companies LEFT JOIN the persisted cache; hits pass
-  *    through, misses flow to the effect stage.
+  *    through, misses flow to the effect stage, which runs once per
+  *    miss: the write-back reads the enriched rows as written.
   *  - The effect stage is `mapPartitions` over a typed Dataset — the
   *    batch-boundary pattern for side-effecting calls (HTTP + JSON
   *    parse), never a per-row UDF inside a select. Offline, the call is
@@ -118,30 +119,44 @@ object Enrich {
       else df.withColumn(name, lit(null).cast(typ))
     }
 
-  /** J2: cache probe → enrich only the misses → union write-back shape.
-    * Returns the enriched frame plus the updated cache contents.
-    * `companies` must carry a `dockets` array column (the A6 context);
-    * cache rows store the full enrichment output including the
-    * docket-derived fields, so hits never recompute context.
+  /** J2: cache probe → enrich only the misses. Returns the enriched
+    * frame and an Observation whose `hits` is the number of companies
+    * found in the cache, filled by the action that consumes the frame.
+    * Cache keys are unique (the cache grows only by misses), so the
+    * inner join's row count is the hit count. `companies` must carry a
+    * `dockets` array column (the A6 context); cache rows store the full
+    * enrichment output including the docket-derived fields, so hits
+    * never recompute context.
     */
   def enrichWithCache(
       spark: SparkSession,
       companies: DataFrame,
-      cache0: DataFrame): (DataFrame, DataFrame) = {
+      cache0: DataFrame): (DataFrame, Observation) = {
     import spark.implicits._
     val cache = migrateCache(cache0)
+    val hitCount = Observation()
     val hits = companies.join(broadcast(cache), Seq("normalized_name"), "inner")
+      .observe(hitCount, count(lit(1)).as("hits"))
     val misses = companies.join(broadcast(cache.select("normalized_name")),
         Seq("normalized_name"), "left_anti")
       .select(col("id"), col("normalized_name"), col("filing_count"),
         col("dockets"))
       .as[CompanyKey]
     val fresh = enrichAll(misses).toDF()
-    val all = hits.select(fresh.columns.map(col).toSeq: _*).unionByName(fresh)
-    val newCache = cache.unionByName(
-      fresh.select("normalized_name", "is_active", "activity_signal",
-        "industry_segment", "product_summary", "market_position",
-        "docket_context"))
-    (all, newCache)
+    (hits.select(fresh.columns.map(col).toSeq: _*).unionByName(fresh), hitCount)
+  }
+
+  /** The write-back: `cache0` plus the rows of `enriched` whose names
+    * it lacks, i.e. the misses. Pass the enriched rows as written and
+    * read back: the lazy frame [[enrichWithCache]] returns would run
+    * the effect a second time for every miss.
+    */
+  def grownCache(cache0: DataFrame, enriched: DataFrame): DataFrame = {
+    val cache = migrateCache(cache0)
+    val cacheColumns = "normalized_name" +: CacheValueColumns.map(_._1)
+    cache.unionByName(
+      enriched.join(broadcast(cache.select("normalized_name")),
+          Seq("normalized_name"), "left_anti")
+        .select(cacheColumns.map(col): _*))
   }
 }

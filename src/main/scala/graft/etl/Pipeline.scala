@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{DownloadSink, Readers, Writers}
@@ -34,16 +34,21 @@ object Pipeline {
       .filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     val structured = IpesPipeline.structure(bronze, conf.ratioThreshold)
 
-    // Validation gate (F15/A13) before anything is written.
-    val split = Validate.split(structured.companies, Validate.companyConstraint)
-    val companies = split.valid.cache()
+    // Validation gate (F15/A13) before anything is written. The run
+    // stats come from Observations on the writes below, each read only
+    // after the action that fills it: `get` waits for a run that has
+    // not happened.
+    val (valid, validity) =
+      Validate.observedValid(structured.companies, Validate.companyConstraint)
+    val companies = valid.cache()
     val filings = structured.filings.cache()
+    val filingCount = Observation()
 
     Writers.csvOrdered(companies,
       Seq("id", "entity_name", "normalized_name", "entity_type",
         "filing_count", "latest_filing_date"),
       s"${conf.outDir}/structured/companies")
-    Writers.csvOrdered(filings,
+    Writers.csvOrdered(filings.observe(filingCount, count(lit(1)).as("n")),
       Seq("company_id", "filing_id", "date_received", "docket_number",
         "submission_type", "status", "primary_doc_url"),
       s"${conf.outDir}/structured/filings")
@@ -64,8 +69,6 @@ object Pipeline {
               "industry_segment STRING, product_summary STRING, market_position STRING, " +
               "docket_context STRING"))
       }
-    val cacheHits = companies.join(cache0.select("normalized_name"),
-      Seq("normalized_name"), "left_semi").count()
     // A6 context: the distinct docket set per company feeds the
     // enrichment effect (the reference folds it into the LLM prompt).
     val companyDockets = filings
@@ -76,13 +79,18 @@ object Pipeline {
       .drop("company_id")
       .withColumn("dockets",
         coalesce(col("dockets"), array().cast("array<string>")))
-    val (enriched, cache1) =
+    val (enriched, cacheHits) =
       Enrich.enrichWithCache(spark, companiesWithContext, cache0)
-    enriched.write.mode("overwrite").parquet(s"${conf.outDir}/enriched")
-    // materialize before swapping the cache dir: every frame above
-    // still holds a lazy plan over the OLD cache files
-    val enrichedCount = spark.read.parquet(s"${conf.outDir}/enriched").count()
-    cache1.write.mode("overwrite").parquet(s"$cachePath.tmp")
+    val enrichedCount = Observation()
+    val enrichedPath = s"${conf.outDir}/enriched"
+    enriched.observe(enrichedCount, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(enrichedPath)
+    // The write-back reads the enriched rows as written, with their
+    // known schema (no inference job), so the effect runs once per
+    // miss. It is written before the swap: its plan reads the old
+    // cache files.
+    Enrich.grownCache(cache0, spark.read.schema(enriched.schema).parquet(enrichedPath))
+      .write.mode("overwrite").parquet(s"$cachePath.tmp")
     val cacheDir = new Path(cachePath)
     val fs = cacheDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(cacheDir, true)
@@ -110,11 +118,12 @@ object Pipeline {
     val summary = DownloadSink.run(queue, manifestPath, conf.fetch)
 
     // Epilogue: append-history stats (S8).
-    val nCompanies = companies.count()
+    def n(obs: Observation, name: String) = obs.get(name).asInstanceOf[Long]
+    val nValid = n(validity, "n_valid")
     val stats = RunStats(
-      nCompanies, filings.count(),
-      nCompanies, split.invalid.count(),
-      enrichedCount, cacheHits,
+      nValid, n(filingCount, "n"),
+      nValid, n(validity, "n_invalid"),
+      n(enrichedCount, "n"), n(cacheHits, "hits"),
       summary.succeeded, summary.failed)
     import spark.implicits._
     Writers.appendHistory(

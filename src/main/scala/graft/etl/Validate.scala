@@ -3,28 +3,28 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** F15/A13 — constraint validation as a predicate split with
-  * observation metrics, replacing the reference's per-record Pydantic
-  * loop (`structure_data.py:263-288`). The split is two filters over
-  * one cached plan; counts come from `Observation` so they cost no
-  * extra pass when the valid side is consumed.
+/** F15/A13 — constraint validation with one counting form, replacing
+  * the reference's per-record Pydantic loop
+  * (`structure_data.py:263-288`). A row is valid when the constraint
+  * is true and invalid otherwise, a null verdict included. Both tallies
+  * are `count_if`s over one pass: [[observedValid]] gathers them as an
+  * `Observation` on the action that consumes the valid rows, and
+  * [[stats]] is the same aggregate as a lazy one-row frame.
   */
 object Validate {
 
-  case class Split(valid: DataFrame, invalid: DataFrame)
-
-  def split(df: DataFrame, constraint: Column): Split =
-    Split(df.filter(constraint), df.filter(!coalesce(constraint, lit(false))))
+  private def nValid(constraint: Column): Column =
+    count_if(constraint).as("n_valid")
+  private def nInvalid(constraint: Column): Column =
+    count_if(!coalesce(constraint, lit(false))).as("n_invalid")
 
   /** Valid rows + an Observation that yields n_valid/n_invalid once the
-    * returned frame is consumed by an action.
+    * returned frame is consumed by an action. Read it only after that
+    * action: `get` waits for a run that has not happened.
     */
   def observedValid(df: DataFrame, constraint: Column): (DataFrame, Observation) = {
     val obs = Observation()
-    val observed = df.observe(obs,
-      sum(when(constraint, 1L).otherwise(0L)).as("n_valid"),
-      sum(when(coalesce(constraint, lit(false)), 0L).otherwise(1L)).as("n_invalid"))
-    (observed.filter(constraint), obs)
+    (df.observe(obs, nValid(constraint), nInvalid(constraint)).filter(constraint), obs)
   }
 
   /** The silver-layer constraint (`code/schemas.py:27` + required
@@ -35,12 +35,9 @@ object Validate {
       col("id").isNotNull && col("id") =!= "" &&
       col("entity_name").isNotNull && col("entity_name") =!= ""
 
-  /** A13: stats row for the history sink (S8). */
-  def stats(split: Split): DataFrame = {
-    val v = split.valid.count()
-    val i = split.invalid.count()
-    val spark = split.valid.sparkSession
-    import spark.implicits._
-    Seq((v, i, v + i)).toDF("valid_records", "invalid_records", "total_records")
-  }
+  /** A13: stats row for the history sink (S8), one lazy aggregate. */
+  def stats(df: DataFrame, constraint: Column): DataFrame =
+    df.agg(nValid(constraint), nInvalid(constraint))
+      .select(col("n_valid").as("valid_records"), col("n_invalid").as("invalid_records"),
+        (col("n_valid") + col("n_invalid")).as("total_records"))
 }

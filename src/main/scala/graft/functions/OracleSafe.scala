@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{EvalMode, MakeDecimal, Numeric
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Oracle-stable numeric aggregation helpers.
   *
@@ -43,13 +43,6 @@ object OracleSafe {
     ColumnBridge.column(MakeDecimal(total.toAggregateExpression(), 19, 2))
       .cast(DoubleType)
   }
-
-  /** Exact sum of a product of two (price, 1-discount style) doubles.
-    * Stays a decimal sum: the scale-4 product's unscaled long would
-    * overflow near sf1000-scale totals.
-    */
-  def decSumProduct(a: Column, b: Column): Column =
-    sum(a.cast(DecimalType(18, 2)) * b.cast(DecimalType(18, 2))).cast(DoubleType)
 
   /** Order-independent average: the exact [[decSum]] divided as a double
     * by `COUNT(*)` — null rows count in the denominator, as in the

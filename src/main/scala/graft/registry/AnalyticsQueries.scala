@@ -14,6 +14,11 @@ import graft.functions.OracleSafe._
   */
 object AnalyticsQueries extends QueryRegistry {
 
+  // The revenue sums below (price × (1 − discount)) stay decimal sums,
+  // not long sums of cents like `decSum`: the product has scale 4, and
+  // a long sum of its unscaled values reaches about a quarter of
+  // `Long.MaxValue` at sf1000, where the decimal sum still has room.
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> ((s, dir) =>
       Tables.lineitem(s, dir)

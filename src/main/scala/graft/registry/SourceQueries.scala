@@ -82,7 +82,7 @@ object SourceQueries extends QueryRegistry {
           .otherwise(col("c_name")).as("entity_name"),
         when(col("c_custkey") % 7 === 0, lit(-1L))
           .otherwise(col("c_custkey") % 100).as("filing_count"))
-      Validate.stats(Validate.split(companies, Validate.companyConstraint))
+      Validate.stats(companies, Validate.companyConstraint)
     }),
 
     // S10+S11+F14 composition: the download queue build — endpoint

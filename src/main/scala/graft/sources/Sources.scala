@@ -78,13 +78,20 @@ object Writers {
     * its raw file system, so the repository directory holds exactly the
     * documents written. Its checksum switches are not touched: the
     * instance is the JVM-wide cached one that every Spark write shares.
+    * The bare Configuration sees no `spark.hadoop.*` keys, so it names
+    * the session's `file:` file system ([[NioLocalFileSystem]]) itself.
     */
-  private[sources] def taskFs(path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration()) match {
+  private[sources] def taskFs(path: String): org.apache.hadoop.fs.FileSystem = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set(LocalFsKey, classOf[NioLocalFileSystem].getName)
+    new org.apache.hadoop.fs.Path(path).getFileSystem(conf) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case fs => fs
     }
+  }
+
+  /** The Hadoop key naming the `file:` scheme's file system class. */
+  private[graft] val LocalFsKey = "fs.file.impl"
 
   /** Binary document-repository writer: one file per (`filename`,
     * `content` binary) row under `path` — the write half of the §1.1

@@ -92,10 +92,7 @@ class IpesPipelineSpec extends AnyFunSuite {
   }
 
   test("validation split + stats: all silver companies pass the constraint") {
-    val split = Validate.split(out.companies, Validate.companyConstraint)
-    assert(split.valid.count() === 3)
-    assert(split.invalid.count() === 0)
-    val st = Validate.stats(split).collect()(0)
+    val st = Validate.stats(out.companies, Validate.companyConstraint).collect()(0)
     assert(st.getLong(0) === 3 && st.getLong(1) === 0 && st.getLong(2) === 3)
   }
 
@@ -133,13 +130,14 @@ class IpesPipelineSpec extends AnyFunSuite {
         "SMB", "CACHED-DOCKET"))
       .toDF("normalized_name", "is_active", "activity_signal",
         "industry_segment", "product_summary", "market_position", "docket_context")
-    val (all, newCache) =
+    val (all, hits) =
       Enrich.enrichWithCache(spark, withDockets(out.companies), cache)
     val tt = all.filter($"normalized_name" === "test telecom").collect()(0)
     assert(tt.getAs[String]("activity_signal") === "cached")
     assert(tt.getAs[String]("docket_context") === "CACHED-DOCKET")
     assert(all.count() === 3)
-    assert(newCache.count() === 3) // cache grew by the two misses
+    assert(hits.get("hits") === 1L)
+    assert(Enrich.grownCache(cache, all).count() === 3) // grew by the two misses
   }
 
   /** Twelve distinct relevant applicant names: a name universe past a

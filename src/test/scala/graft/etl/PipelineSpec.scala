@@ -2,6 +2,11 @@ package graft.etl
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.SparkListenerStageSubmitted
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,8 +19,9 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def writeBronze(dir: String): String = {
-    val rows = Seq(
+  private def writeBronze(dir: String): String = writeBronze(dir, bronzeRows)
+
+  private val bronzeRows = Seq(
       ("1", "Test Telecom LLC", "2024-01-15", "APPLICATION", "INBOX-52.15",
         "VoIP Numbering Authorization", "", "DISSEMINATED", "", "",
         "https://www.fcc.gov/ecfs/document/1/1", "https://x/f/1"),
@@ -25,6 +31,10 @@ class PipelineSpec extends AnyFunSuite {
       ("3", "Stratus Networks", "2024-04-05", "PETITION", "INBOX-52.15",
         "VoIP Numbering Authorization", "", "DISSEMINATED", "", "",
         "", "https://x/f/3"))
+
+  private def writeBronze(dir: String,
+                          rows: Seq[(String, String, String, String, String, String,
+                            String, String, String, String, String, String)]): String = {
     rows.toDF(IpesSchemas.bronze.fieldNames.toIndexedSeq: _*)
       .write.mode("overwrite").json(s"$dir/bronze")
     s"$dir/bronze"
@@ -40,13 +50,15 @@ class PipelineSpec extends AnyFunSuite {
       ("c1", "stratus network", 2L, Seq("INBOX-52.15")),
       ("c2", "test telecom llc", 1L, Seq.empty[String]))
       .toDF("id", "normalized_name", "filing_count", "dockets")
-    val (enriched, newCache) = Enrich.enrichWithCache(spark, companies, oldCache)
+    val (enriched, hits) = Enrich.enrichWithCache(spark, companies, oldCache)
     val byName = enriched.collect()
       .map(r => r.getAs[String]("normalized_name") -> r).toMap
     // the hit passes through with a migrated (null) context; the miss
     // computes a fresh context from its dockets
     assert(byName("stratus network").getAs[String]("docket_context") === null)
     assert(byName("test telecom llc").getAs[String]("docket_context") === "")
+    assert(hits.get("hits") === 1L)
+    val newCache = Enrich.grownCache(oldCache, enriched)
     assert(newCache.columns.contains("docket_context"))
     assert(newCache.count() === 2)
   }
@@ -112,5 +124,70 @@ class PipelineSpec extends AnyFunSuite {
       compiles.getCount - c0
     }
     assert(deltas.last <= 5, s"compiles per run: ${deltas.mkString(", ")}")
+  }
+
+  test("run stats equal recounts of the written outputs, fresh and incremental") {
+    val dir = Files.createTempDirectory("pipeline-stats").toString
+    val fetch: String => Either[String, Array[Byte]] = url => Right(s"%PDF-1.7 $url".getBytes)
+    val out = s"$dir/out"
+    def recount(bronzePath: String, oldCacheNames: Seq[String]): Pipeline.RunStats = {
+      def csv(name: String) = spark.read.option("header", true).csv(s"$out/structured/$name")
+      val structured = IpesPipeline.structure(
+        graft.sources.Readers.jsonLines(spark, IpesSchemas.bronze, bronzePath)
+          .filter(col("_corrupt_record").isNull).drop("_corrupt_record"))
+      val companies = csv("companies").count()
+      Pipeline.RunStats(companies, csv("filings").count(), companies,
+        structured.companies.filter(!coalesce(Validate.companyConstraint, lit(false))).count(),
+        spark.read.parquet(s"$out/enriched").count(),
+        csv("companies").join(oldCacheNames.toDF("normalized_name"), Seq("normalized_name"),
+          "left_semi").count(),
+        0L, 0L)
+    }
+    def cacheNames = spark.read.parquet(s"$out/enrichment_cache")
+      .select("normalized_name").as[String].collect().toSeq
+
+    val first = writeBronze(s"$dir/b1")
+    val r1 = Pipeline.run(spark, Pipeline.Config(first, out, fetch = fetch))
+    assert(r1.copy(downloadsOk = 0, downloadsFailed = 0) === recount(first, Nil))
+
+    // a new company and a new filing for a known one
+    val grown = writeBronze(s"$dir/b2", bronzeRows ++ Seq(
+      ("4", "Nimbus Voice Inc", "2024-05-01", "APPLICATION", "INBOX-52.15",
+        "VoIP Numbering Authorization", "", "DISSEMINATED", "", "",
+        "https://www.fcc.gov/ecfs/document/4/1", "https://x/f/4"),
+      ("5", "Test Telecom LLC", "2024-06-01", "APPLICATION", "INBOX-52.15",
+        "VoIP Numbering Authorization", "", "DISSEMINATED", "", "",
+        "https://www.fcc.gov/ecfs/document/5/1", "https://x/f/5")))
+    val before = cacheNames
+    val r2 = Pipeline.run(spark, Pipeline.Config(grown, out, fetch = fetch))
+    assert(r2.copy(downloadsOk = 0, downloadsFailed = 0) === recount(grown, before))
+    assert((r2.companies, r2.filings, r2.cacheHits, r2.downloadsOk) === (3, 5, 2, 2))
+    assert(cacheNames.sorted === Seq("nimbus voice", "stratus network", "test telecom"))
+  }
+
+  test("a bronze input with no relevant filing gives all-zero run stats") {
+    val dir = Files.createTempDirectory("pipeline-empty").toString
+    val bronzePath = writeBronze(dir, Seq(
+      ("1", "Acme Energy LLC", "2024-01-15", "APPLICATION", "WC-17-108",
+        "Pole attachments", "", "DISSEMINATED", "", "",
+        "https://www.fcc.gov/ecfs/document/1/1", "https://x/f/1")))
+    // every Observation must be filled even though no row reaches it
+    val run = Future(Pipeline.run(spark, Pipeline.Config(bronzePath, s"$dir/out")))
+    assert(Await.result(run, 3.minutes) === Pipeline.RunStats(0, 0, 0, 0, 0, 0, 0, 0))
+  }
+
+  test("the enrichment effect stage runs once per run") {
+    // The write-back used to recompute the misses, so every miss paid
+    // the effect (an LLM call in the reference) twice.
+    val dir = Files.createTempDirectory("pipeline-effect").toString
+    val (stats, events) = TestSpark.withEvents(
+      Pipeline.run(spark, Pipeline.Config(writeBronze(dir), s"$dir/out")))
+    assert(stats.enriched === 2 && stats.cacheHits === 0)
+    // an RDD's scope is the physical operator that built it
+    val stages = events.collect { case e: SparkListenerStageSubmitted =>
+      e.stageInfo.rddInfos.flatMap(_.scope.map(_.name)).toSeq
+    }
+    assert(stages.count(_.contains("MapPartitions")) === 1,
+      stages.map(_.mkString(",")).mkString("\n"))
   }
 }

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.TimeUnit
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
@@ -78,39 +75,10 @@ class FixtureToleranceSpec extends AnyFunSuite {
     }
   }
 
-  /** `body`'s result and the jobs started on this thread while it
-    * runs. The listener counts job starts carrying a tag unique to this
-    * call, up to a marker job: bus events arrive in order, so once the
-    * marker's end is seen every earlier start has been counted.
-    */
+  /** `body`'s result and the jobs it starts. */
   private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID.toString
-    val started = new AtomicInteger
-    val markerId = new AtomicInteger(-1)
-    val markerEnded = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.test.tag")).foreach {
-          case `tag` => started.incrementAndGet()
-          case t if t == s"$tag-marker" => markerId.set(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerId.get) markerEnded.countDown()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
-      val result = body
-      sc.setLocalProperty("graft.test.tag", s"$tag-marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job's end never arrived")
-      (result, started.get)
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
+    val (result, events) = TestSpark.withEvents(body)
+    (result, events.count(_.isInstanceOf[SparkListenerJobStart]))
   }
 
   test("a second Tables read of unchanged files starts no job") {
