@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextAnalysis
@@ -222,6 +222,12 @@ object ScaleDedup {
     // asc == position in the sorted pair array — (dfreq, sh) is unique
     // within a doc because sh is distinct there).
     //
+    // The sort is `sort_array`, not `array_sort`: on non-null structs
+    // both give the same ascending order, but `array_sort` is a
+    // codegen fallback with an interpreted comparator and takes the
+    // enclosing posexplode out of whole-stage codegen, where
+    // `sort_array` compares with generated code.
+    //
     // r14 shrinks retained:
     //  - dfreq >= 2 (applied after the cut, exactly like the rk
     //    filter): a prefix shingle with corpus doc-frequency 1 joins
@@ -233,7 +239,7 @@ object ScaleDedup {
       .groupBy(col("id"))
       .agg(collect_list(struct(col("dfreq"), col("sh"))).as("ps"))
       .select(col("id"), size(col("ps")).cast("long").as("sz"),
-        posexplode(slice(array_sort(col("ps")), lit(1), lCol)))
+        posexplode(slice(sort_array(col("ps")), lit(1), lCol)))
       .filter(col("col.dfreq") >= 2)
       .select(col("id"), col("col.sh").as("sh"),
         (col("pos") + 1).cast("long").as("p"), col("sz"))
@@ -527,11 +533,14 @@ object ScaleDedup {
     * of the count join, which any threshold > 0 filters anyway —
     * asserted).
     *
-    * The size-annotated candidate list feeds both branches, so it is
-    * localCheckpoint'ed: unpinned, the whole LSH band-join lineage
-    * appeared once per branch in the plan (AQE exchange reuse happened
-    * to deduplicate it locally, but that reuse is an optimizer
-    * courtesy, not a contract).
+    * The size-annotated candidate list is localCheckpoint'ed, and an
+    * `Observation` on that (eager) checkpoint counts the pairs past the
+    * gate in the same pass. The index branch is planned only when that
+    * count is > 0: planned unconditionally, AQE's initial plan built
+    * both broadcast hash relations of the exploded index (every set
+    * element, twice) before it could see the branch was empty — on
+    * every call, although at the gate's 8192 almost no corpus has a
+    * large pair.
     */
   def verifyJaccardSets(
       candidates: DataFrame, sets: DataFrame, threshold: Double,
@@ -549,6 +558,7 @@ object ScaleDedup {
     // ~40 B/pair (guide §2.3: pin/shuffle derived scalars, not
     // payloads). inter_sm is null exactly when either side's set
     // exceeds the gate — the branch predicate the filters below read.
+    val largeCount = Observation()
     def side(suffix: String): DataFrame = sets.select(
       col("id").as(s"id_$suffix"),
       size(col("shs")).cast("long").as(s"sz_$suffix"),
@@ -563,6 +573,7 @@ object ScaleDedup {
         when(col("shs_a").isNotNull && col("shs_b").isNotNull,
           graft.functions.GraftFunctions.sortedIntersectSize(
             col("shs_a"), col("shs_b")).cast("long")).as("inter_sm"))
+      .observe(largeCount, count_if(col("inter_sm").isNull).as("n"))
       .localCheckpoint()
     def jaccardOf(inter: Column, szA: Column, szB: Column): Column =
       round(inter.cast("double") / (szA + szB - inter), 6)
@@ -571,22 +582,25 @@ object ScaleDedup {
       .filter(col("inter_sm").isNotNull)
       .select(col("id_a"), col("id_b"),
         jaccardOf(col("inter_sm"), col("sz_a"), col("sz_b")).as("jaccard"))
-
-    val largePairs = cand
-      .filter(col("inter_sm").isNull)
-      .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-    val idx = explodeSets(sets)
-    val largeInter = largePairs.select(col("id_a"), col("id_b"))
-      .join(idx.select(col("id").as("id_a"), col("sh")), "id_a")
-      .join(idx.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    val large = largePairs
-      .join(largeInter, Seq("id_a", "id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccardOf(col("inter"), col("sz_a"), col("sz_b")).as("jaccard"))
-
-    small.unionByName(large)
+    // read after the checkpoint above has run: `get` waits for the
+    // action that fills it
+    val verified = if (largeCount.get("n") == 0L) small else {
+      val largePairs = cand
+        .filter(col("inter_sm").isNull)
+        .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
+      val idx = explodeSets(sets)
+      val largeInter = largePairs.select(col("id_a"), col("id_b"))
+        .join(idx.select(col("id").as("id_a"), col("sh")), "id_a")
+        .join(idx.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("inter"))
+      val large = largePairs
+        .join(largeInter, Seq("id_a", "id_b"))
+        .select(col("id_a"), col("id_b"),
+          jaccardOf(col("inter"), col("sz_a"), col("sz_b")).as("jaccard"))
+      small.unionByName(large)
+    }
+    verified
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }

@@ -36,6 +36,13 @@ object GraftFunctions {
   def pqEncode(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
     ColumnBridge.column(PqEncode(ColumnBridge.expression(v), codebooks))
 
+  /** `lsh_buckets(v)` — the sign-bit bucket of every LSH table in one
+    * codegen'd pass over the vector; `planes(t)(p)` is table t's plane
+    * p (bit-parity with `Knn.lshBucket` per table).
+    */
+  def lshBuckets(v: Column, planes: Seq[Seq[Seq[Double]]]): Column =
+    ColumnBridge.column(LshBuckets(ColumnBridge.expression(v), planes))
+
   /** `cms_estimate(sketch, item)` — point-query a serialized
     * Count-Min sketch column for a string item's estimated count.
     */

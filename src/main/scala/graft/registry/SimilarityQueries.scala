@@ -307,7 +307,7 @@ object SimilarityQueries extends QueryRegistry {
         .agg(round(sum(col("col").cast(DecimalType(18, 9))).cast(DoubleType) /
           count(lit(1)), 6).as("m"))
         .groupBy(col("doc_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
+        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("s"))
         .select(col("doc_id") +:
           (0 until 4).map(i => col("s").getItem(i).getField("m").as(s"e$i")): _*)
     }),

@@ -202,7 +202,7 @@ object Clustering {
       .agg(round(sum(col("col").cast(DecimalType(18, 9))).cast(DoubleType) /
         count(lit(1)), 6).as("m"))
       .groupBy(col("cid"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("s"))
       .select(col("cid"), transform(col("s"), x => x.getField("m")).as("c_emb"))
 
   /** Lloyd-refined cluster assignment: (vec_id, cluster, dist2).

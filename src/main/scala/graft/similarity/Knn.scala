@@ -169,22 +169,36 @@ object Knn {
   def autoProbe(nCentroids: Int): Int =
     math.max(8, math.ceil(nCentroids / 2.0).toInt)
 
-  /** Sign-bit bucket id from `nPlanes` hyperplanes of table `table`. */
+  /** Sign-bit bucket id from `nPlanes` hyperplanes of table `table`,
+    * as column math: one [[dot]] against a literal plane per bit. The
+    * operators bucket through [[bucketedAll]]'s one-pass kernel; this
+    * form is its parity reference and stays public for callers that
+    * bucket a single table.
+    */
   def lshBucket(emb: Column, dim: Int, nPlanes: Int, table: Int = 0): Column =
     (0 until nPlanes).map { p =>
       val proj = dot(emb, typedLit(planeVector(table, p, dim)))
       when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
 
+  /** The planes of tables 0 until `nTables`, indexed (table)(plane)(dim)
+    * — what [[graft.functions.LshBuckets]] takes.
+    */
+  private[graft] def lshPlanes(dim: Int, nPlanes: Int,
+      nTables: Int): Seq[Seq[Seq[Double]]] =
+    (0 until nTables).map(t => (0 until nPlanes).map(p => planeVector(t, p, dim)))
+
   /** (tbl, bucket, ...) rows: one row per vector per LSH table — all
-    * tables' buckets computed in a single pass over the input (one
-    * posexplode, not one scan per table).
+    * tables' buckets computed by ONE [[graft.functions.LshBuckets]]
+    * kernel that reads each embedding once (bit-identical to
+    * [[lshBucket]] per table), then one posexplode, not one scan per
+    * table.
     */
   private def bucketedAll(df: DataFrame, dim: Int, nPlanes: Int,
                           nTables: Int): DataFrame =
     df.select(col("*"),
-      posexplode(array((0 until nTables).map(t =>
-        lshBucket(col("embedding"), dim, nPlanes, t)): _*)))
+      posexplode(graft.functions.GraftFunctions.lshBuckets(
+        col("embedding"), lshPlanes(dim, nPlanes, nTables))))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
 
   /** ANN top-k: candidates restricted to the buckets the query lands in
@@ -237,7 +251,7 @@ object Knn {
         .groupBy(col("cid"), col("pos"))
         .agg(avg(col("col").cast("double")).as("m"))
         .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
+        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("s"))
         .select(col("cid"), transform(col("s"), x => x.getField("m")).as("c_emb"))
     }
   }

@@ -171,7 +171,7 @@ object ScaleProbe {
         .groupBy(col("id"))
         .agg(collect_list(struct(col("dfreq"), col("sh"))).as("ps"))
         .select(col("id"), size(col("ps")).cast("long").as("sz"),
-          posexplode(slice(array_sort(col("ps")), lit(1), lCol)))
+          posexplode(slice(sort_array(col("ps")), lit(1), lCol)))
         .filter(col("col.dfreq") >= 2)
         .select(col("id"), col("col.sh").as("sh"),
           (col("pos") + 1).cast("long").as("p"), col("sz"))

@@ -259,6 +259,58 @@ class ScaleDedupSpec extends AnyFunSuite {
     assert(gated === ungated)
   }
 
+  /** Every physical node of a planned frame, before and after it runs:
+    * AQE's initial plan (which builds broadcasts even for branches it
+    * later drops) and its final plan, query stages unwrapped.
+    */
+  private def planNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def all(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => all(a.inputPlan) ++ all(a.executedPlan)
+      case q: QueryStageExec => q +: all(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(all)
+    }
+    all(df.queryExecution.executedPlan)
+  }
+
+  test("verifyJaccardSets plans the index branch only when a pair crosses the gate") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val sets = ScaleDedup.docShingleSets(docs, "doc_id", "text", 3).localCheckpoint()
+    val cands = ScaleDedup.minhashCandidatesFromSets(sets, 64, 32)
+    def run(gate: Int) = {
+      val out = ScaleDedup.verifyJaccardSets(cands, sets, threshold = 0.5,
+        largeSetGate = gate)
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+      val nodes = planNodes(out)
+      (rows.toMap, nodes.exists(_.isInstanceOf[GenerateExec]),
+        nodes.exists(_.isInstanceOf[BroadcastExchangeExec]))
+    }
+    // no fixture set reaches the default gate: no explode(shs) and no
+    // broadcast of the index, in the initial plan or the final one
+    val (ungated, genU, bcU) = run(8192)
+    assert(ungated.nonEmpty)
+    assert(!genU && !bcU, s"index branch planned: generate=$genU broadcast=$bcU")
+    // a gate the sets cross plans the branch, with the same answer
+    val (gated, genG, _) = run(1)
+    assert(genG)
+    assert(gated === ungated)
+  }
+
+  test("verifyJaccardSets of no candidates returns no rows") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val sets = ScaleDedup.docShingleSets(docs, "doc_id", "text", 3)
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    // the large-pair Observation must be filled although no row reaches it
+    val run = Future(ScaleDedup.verifyJaccardSets(none, sets, threshold = 0.5).count())
+    assert(Await.result(run, 3.minutes) === 0L)
+  }
+
   test("duplicatedSpans finds maximal cross-doc token runs (hand-computed)") {
     import spark.implicits._
     // A and B share the 11-token run a..k (A at pos 1, B at pos 3);
