@@ -19,17 +19,23 @@ import graft.functions.GraftFunctions
   * Scale: the only shuffles are (1) the canonical-name dedup join
   * (broadcast — |distinct names| is tiny relative to rows), (2) the
   * groupBy canonical name — and that groupBy aggregates SCALARS only.
+  * Each output is a separate write and each write is planned on its
+  * own, so `structure` pins the two frames every output shares, once
+  * per call: the canonical-name map (one row per distinct name) and the
+  * company keys (one row per company). `companies` is a projection of
+  * the pinned keys, and the fact table is the row-level checkpoint
+  * joined to the pinned map and keys (both broadcast): no write re-runs
+  * the name-level dedup join or the grouped aggregate.
   * The r7 form collected the per-name filing list inside the phase-1
   * aggregation (behind a localCheckpoint, so column pruning could
   * never drop it): one aggregation buffer then held every filing of a
   * name — ~330k structs/name at the 100× orders replica — and OOM'd
   * the executor. Now the star outputs (`companies`, `filings`) touch
-  * no collect_list at all (the fact table is a broadcast join against
-  * the canonical map + gated ids over the row-level checkpoint), and
-  * only the `nested` JSON form — whose CONTRACT is a per-company
-  * array — builds its lists, lazily, when actually written.
-  * Filings-per-company skew in that one consumer is the documented
-  * residual; cap with slice() if a company's array must be bounded.
+  * no collect_list at all, and only the `nested` JSON form — whose
+  * CONTRACT is a per-company array — builds its lists (its one
+  * aggregate), lazily, when actually written. Filings-per-company skew
+  * in that one consumer is the documented residual; cap with slice()
+  * if a company's array must be bounded.
   */
 object IpesPipeline {
 
@@ -142,6 +148,10 @@ object IpesPipeline {
         perName.select(col("normalized_raw").as("name")), "name",
         ratioThreshold)
     }).withColumnRenamed("canonical", "normalized_name")
+      // Pinned (see the class doc): the company keys below, the fact
+      // join and the nested lists all read this map. One row per
+      // distinct name.
+      .localCheckpoint()
 
     // Phase 2 — merge dedup'd groups: scalar aggregates re-combine
     // losslessly (max of max, sum of counts, or of ors).
@@ -163,9 +173,12 @@ object IpesPipeline {
       .withColumn("latest_filing_date", coalesce(col("_latest"), lit("")))
       .drop("is_individual", "_latest")
 
+    // Pinned: companies, the fact table's id map and both nested sides
+    // read the company keys, and each would re-run the grouped
+    // aggregate above in its own write. One row per company.
     val keyed = (if (withId)
       gated.withColumn("id", GraftFunctions.uuid5(col("normalized_name")))
-    else gated.withColumn("id", col("normalized_name")))
+    else gated.withColumn("id", col("normalized_name"))).localCheckpoint()
 
     val companies = keyed.select(
       col("id"), col("entity_name"), col("normalized_name"),
@@ -197,9 +210,9 @@ object IpesPipeline {
     val lists = canonRows
       .join(idMap.select(col("normalized_name")), "normalized_name")
       .groupBy(col("normalized_name"))
-      .agg(reverse(array_sort(
-        collect_list(struct(col("date_received").as("_k"), col("f").as("f")))))
-        .as("_sorted"))
+      .agg(sort_array(
+        collect_list(struct(col("date_received").as("_k"), col("f").as("f"))),
+        asc = false).as("_sorted"))
       .withColumn("filings", transform(col("_sorted"), x => x.getField("f")))
       .drop("_sorted")
     val nested = keyed

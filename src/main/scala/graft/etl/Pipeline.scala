@@ -73,7 +73,7 @@ object Pipeline {
     // enrichment effect (the reference folds it into the LLM prompt).
     val companyDockets = filings
       .groupBy(col("company_id"))
-      .agg(array_sort(collect_set(col("docket_number"))).as("dockets"))
+      .agg(sort_array(collect_set(col("docket_number"))).as("dockets"))
     val companiesWithContext = companies
       .join(companyDockets, companies("id") === companyDockets("company_id"), "left")
       .drop("company_id")
@@ -99,22 +99,23 @@ object Pipeline {
 
     // Stage 4: incremental downloads (S9-S11) against the manifest.
     val manifestPath = s"${conf.outDir}/downloads"
+    val manifestNames = Option(new java.io.File(manifestPath).list())
+      .getOrElse(Array.empty[String])
+      .map { n =>
+        val i = n.lastIndexOf('.')
+        if (i >= 0) n.substring(0, i) else n
+      }
     val manifest = {
-      val dir = new java.io.File(manifestPath)
-      val names = Option(dir.list()).getOrElse(Array.empty[String])
-        .map { n =>
-          val i = n.lastIndexOf('.')
-          if (i >= 0) n.substring(0, i) else n
-        }
       import spark.implicits._
-      names.toSeq.toDF("filename")
+      manifestNames.toSeq.toDF("filename")
     }
     val docQueue = filings.filter(col("primary_doc_url") =!= "")
       .join(companies.select(col("id"), col("entity_name")),
         filings("company_id") === col("id"))
       .select(col("filing_id").as("doc_id"), col("entity_name"),
         col("primary_doc_url").as("url"))
-    val queue = DownloadSink.buildQueue(docQueue, manifest, conf.docLimit)
+    val queue = DownloadSink.buildQueue(docQueue, manifest,
+      manifestNames.length.toLong, conf.docLimit)
     val summary = DownloadSink.run(queue, manifestPath, conf.fetch)
 
     // Epilogue: append-history stats (S8).

@@ -93,7 +93,7 @@ object SourceQueries extends QueryRegistry {
     // SQL) is the same either way by BloomSkip's construction.
     "s10_queue_build" -> ((s, dir) => {
       val (docs, manifest) = s10Fixture(s, dir)
-      DownloadSink.buildQueue(docs, manifest)
+      DownloadSink.buildQueue(docs, manifest, manifest.count())
         .select("doc_id", "entity_name", "url", "filename")
     }),
 
@@ -280,7 +280,7 @@ object SourceQueries extends QueryRegistry {
       val manifest = docs.filter(col("doc_id").cast("long") % 5 === 0)
         .select(concat(Normalize.sanitizeFilename(col("entity_name")),
           lit("_"), col("doc_id")).as("filename"))
-      val queue = DownloadSink.buildQueue(docs, manifest)
+      val queue = DownloadSink.buildQueue(docs, manifest, manifest.count())
       val fetch: String => Either[String, Array[Byte]] = url => {
         val id = url.split("/").takeRight(2).head.toLong
         if (id % 7 == 0) Left(s"simulated 404 for $id")

@@ -52,14 +52,16 @@ object DownloadSink {
 
   /** Build the download queue: rewrite, name, skip-existing against
     * the manifest. ONE code path for the skip-existing contract, two
-    * physical strategies behind a measured gate: the manifest is
-    * counted once (it is persisted completed-outputs state — a small
-    * scan, never the corpus), and that count picks plain anti-join
+    * physical strategies behind a measured gate: the caller passes the
+    * manifest's row count (`manifestRows`; it is persisted
+    * completed-outputs state, which a caller usually has listed
+    * already), and that count picks plain anti-join
     * (broadcast-sized manifest) vs Bloom split (shuffle-sized
-    * manifest), reusing the count for the filter sizing so the
-    * manifest is not scanned a second time. Both branches are exactly
-    * equal by BloomSkip's construction; DownloadSinkSpec pins the
-    * equality on both sides of the gate.
+    * manifest) and sizes the filter, so the manifest is never scanned
+    * just to be counted. Both branches are exact whatever the count:
+    * a wrong count can only pick the slower branch or mis-size the
+    * filter (more suspects), never change the rows. DownloadSinkSpec
+    * pins the equality on both sides of the gate.
     *
     * DETERMINISM PRECONDITION (inherited from
     * [[BloomSkip.skipExisting]], which evaluates the queue plan twice
@@ -70,17 +72,18 @@ object DownloadSink {
     * single-evaluation anti-join below it. Persist or checkpoint a
     * nondeterministic frame before calling.
     */
-  def buildQueue(docs: DataFrame, manifest: DataFrame, limit: Int = 0,
+  def buildQueue(docs: DataFrame, manifest: DataFrame, manifestRows: Long,
+                 limit: Int = 0,
                  bloomGate: Long = BloomSkipMinManifestRows): DataFrame = {
+    require(manifestRows >= 0, s"manifestRows must be >= 0, got $manifestRows")
     val named = docs
       .withColumn("url", rewriteUrl(col("url")))
       .withColumn("filename",
         concat(Normalize.sanitizeFilename(col("entity_name")), lit("_"),
           col("doc_id")))
     val m = manifest.select(col("filename"))
-    val n = m.count()
     val q =
-      if (n >= bloomGate)
+      if (manifestRows >= bloomGate)
         // The sink KNOWS the manifest size, so let the filter grow to
         // hold the stated 1% fpp: 2^30 bits (128 MiB serialized worst
         // case, shipped once per executor) covers ~112M keys at 1%.
@@ -90,7 +93,7 @@ object DownloadSink {
         // the cap fpp degrades gracefully; exactness never depends on
         // it.
         BloomSkip.skipExisting(named, m, "filename",
-          maxNumBits = 1L << 30, knownExistingCount = n)
+          maxNumBits = 1L << 30, knownExistingCount = manifestRows)
       else named.join(m, Seq("filename"), "left_anti")
     if (limit > 0) q.limit(limit) else q
   }

@@ -40,7 +40,7 @@ object BloomProbe {
           val (docs, manifest) =
             graft.registry.SourceQueries.s10Fixture(spark, dir)
           graft.sources.DownloadSink
-            .buildQueue(docs, manifest, bloomGate = Long.MaxValue)
+            .buildQueue(docs, manifest, manifest.count(), bloomGate = Long.MaxValue)
             .select("doc_id", "entity_name", "url", "filename")
         } else graft.SparkEntry.queries(name)(spark, dir)
       // Execute THIS QueryExecution (df.write would plan a fresh one,

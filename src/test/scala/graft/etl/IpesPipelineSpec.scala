@@ -91,6 +91,30 @@ class IpesPipelineSpec extends AnyFunSuite {
     assert(stratus === Seq("5", "4"))
   }
 
+  test("the outputs read the name map and company keys as pinned leaves") {
+    // Every write plans its output on its own, so an output that
+    // re-derives the name-level aggregate runs it again per write.
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def aggregates(p: LogicalPlan) = p.collect { case a: Aggregate => a }.size
+    def pinned(p: LogicalPlan) =
+      p.collectLeaves().collect { case r: LogicalRDD => r.output.map(_.name).toSet }
+    val canon = Set("name", "normalized_name")
+    val keyed = Set("id", "entity_name", "normalized_name", "entity_type",
+      "is_applicant", "filing_count", "latest_filing_date")
+    val companies = out.companies.queryExecution.optimizedPlan
+    val filings = out.filings.queryExecution.optimizedPlan
+    val nested = out.nested.queryExecution.optimizedPlan
+    assert(aggregates(companies) === 0, companies)
+    assert(aggregates(filings) === 0, filings)
+    assert(aggregates(nested) === 1, nested) // the per-company filing lists
+    assert(pinned(companies).contains(keyed), companies)
+    for (p <- Seq(filings, nested)) {
+      assert(pinned(p).contains(canon), p)
+      assert(pinned(p).contains(keyed), p)
+    }
+  }
+
   test("validation split + stats: all silver companies pass the constraint") {
     val st = Validate.stats(out.companies, Validate.companyConstraint).collect()(0)
     assert(st.getLong(0) === 3 && st.getLong(1) === 0 && st.getLong(2) === 3)

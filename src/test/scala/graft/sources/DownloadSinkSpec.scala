@@ -24,14 +24,14 @@ class DownloadSinkSpec extends AnyFunSuite {
     else Right(Array[Byte]('P', 'K', 3, 4, 0))
 
   test("S10 URL rewrite hits the binary endpoint") {
-    val urls = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"))
+    val urls = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), 0L)
       .select("url").collect().map(_.getString(0))
     assert(urls.forall(_.contains("/documents/")))
   }
 
   test("sink writes sniffed extensions and counts outcomes") {
     val out = Files.createTempDirectory("dl").toString
-    val q = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"))
+    val q = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), 0L)
     val s = DownloadSink.run(q, out, fakeFetch)
     assert(s === DownloadSink.Summary(2, 1))
     val files = new java.io.File(out).list().sorted
@@ -44,7 +44,7 @@ class DownloadSinkSpec extends AnyFunSuite {
     // later write in the process.
     val root = Files.createTempDirectory("dl_crc").toString
     DownloadSink.run(
-      DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename")),
+      DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), 0L),
       s"$root/downloads", fakeFetch)
     Seq((1, "a")).toDF("k", "v").write.csv(s"$root/csv")
     val written = new java.io.File(s"$root/csv").list()
@@ -67,7 +67,7 @@ class DownloadSinkSpec extends AnyFunSuite {
       if (n < 2) Left("HTTP 503") else Right("%PDF-1.7 ok".getBytes)
     }
     val queue = DownloadSink.buildQueue(
-      docs.filter(col("doc_id") < 3), Seq.empty[String].toDF("filename"))
+      docs.filter(col("doc_id") < 3), Seq.empty[String].toDF("filename"), 0L)
     val once = DownloadSink.run(queue,
       Files.createTempDirectory("graft-retry1").toString, flaky, maxConcurrency = 1)
     assert(once === DownloadSink.Summary(0, 2)) // single attempt: all transient-fail
@@ -82,7 +82,7 @@ class DownloadSinkSpec extends AnyFunSuite {
 
   test("S11 skip-existing: manifest anti-join shrinks the queue") {
     val manifest = Seq("Acme_Telecom_LLC_1").toDF("filename")
-    val q = DownloadSink.buildQueue(docs, manifest)
+    val q = DownloadSink.buildQueue(docs, manifest, 1L)
     assert(q.count() === 2)
     assert(!q.select("filename").collect().map(_.getString(0))
       .contains("Acme_Telecom_LLC_1"))
@@ -102,18 +102,24 @@ class DownloadSinkSpec extends AnyFunSuite {
     val manifest = many.filter(col("doc_id") % 5 === 0)
       .select(concat(graft.etl.Normalize.sanitizeFilename(col("entity_name")),
         lit("_"), col("doc_id")).as("filename"))
-    def rows(gate: Long) =
-      DownloadSink.buildQueue(many, manifest, bloomGate = gate)
+    def rows(gate: Long, manifestRows: Long = 80L) =
+      DownloadSink.buildQueue(many, manifest, manifestRows, bloomGate = gate)
         .select("doc_id", "entity_name", "url", "filename")
         .collect().map(_.toSeq).toSet
     val plain = rows(Long.MaxValue)
     val bloomed = rows(1L)
     assert(plain.size === 320)
     assert(bloomed === plain)
+    // The caller's count only picks the branch and sizes the filter: an
+    // understated count (a filter sized for one key, so nearly every
+    // row is a suspect) and an overstated one give the same rows.
+    assert(rows(1L, manifestRows = 1L) === plain)
+    assert(rows(1L, manifestRows = 1000000L) === plain)
+    assert(rows(Long.MaxValue, manifestRows = 0L) === plain)
   }
 
   test("doc-limit caps the queue like --doc-limit") {
-    val q = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), limit = 1)
+    val q = DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), 0L, limit = 1)
     assert(q.count() === 1)
   }
 
@@ -128,7 +134,7 @@ class DownloadSinkSpec extends AnyFunSuite {
     // same types the sink sniffed, and feed the multimodal metadata op.
     val out = Files.createTempDirectory("dl_readback").toString
     DownloadSink.run(
-      DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename")),
+      DownloadSink.buildQueue(docs, Seq.empty[String].toDF("filename"), 0L),
       out, fakeFetch)
     val repo = spark.read.format("binaryFile").load(out)
     val classified = repo.select(

@@ -92,7 +92,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     Seq((1, "a"), (2, "b")).toDF("k", "v").write.csv(root.resolve("csv").toString)
     DownloadSink.run(
       Seq(("1", "Acme", "https://x/document/1/1")).toDF("doc_id", "entity_name", "url")
-        .transform(DownloadSink.buildQueue(_, Seq.empty[String].toDF("filename"))),
+        .transform(DownloadSink.buildQueue(_, Seq.empty[String].toDF("filename"), 0L)),
       root.resolve("downloads").toString,
       url => Right(s"%PDF-1.7 $url".getBytes))
     val written = Files.walk(root).iterator.asScala.filter(_ != root).toSeq
